@@ -441,10 +441,6 @@ def incremental_vs_rebuild(spark, sf_dir: str) -> dict:
     # re-split loads both semantic pair generators (batch×corpus against
     # the stored cell index AND batch×batch) at every SF; sem_edges_added
     # proves it from the measured run itself.
-    from personal_data_lakehouse_spark.corpus_incremental import (
-        apply_increment_v2_detailed,
-        build_state_v2_detailed,
-    )
     from personal_data_lakehouse_spark.plans.round10_ops import (
         _materialized_base_state_v2,
     )
@@ -476,13 +472,13 @@ def incremental_vs_rebuild(spark, sf_dir: str) -> dict:
     t0 = time.perf_counter()
     (inc2_jobs, inc2_cps) = _materialize(
         "inc_vs_rebuild:inc2",
-        apply_increment_v2_detailed(state2, batch2, emb_batch, cents),
+        apply_increment_detailed(state2, batch2, emb_batch, cents),
     )
     inc2_sec = time.perf_counter() - t0
 
     t0 = time.perf_counter()
     rebuild2_jobs, _ = _materialize(
-        "inc_vs_rebuild:rebuild2", build_state_v2_detailed(docs2, emb, cents)
+        "inc_vs_rebuild:rebuild2", build_state_detailed(docs2, emb, cents)
     )
     rebuild2_sec = time.perf_counter() - t0
     # post-timing: the semantic edges the LOADED increment actually added

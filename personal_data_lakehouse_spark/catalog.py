@@ -13,6 +13,8 @@ below choose partition columns per the reference's layout
 
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import DataFrame, SparkSession
 
 LAYERS = ("bronze", "silver", "gold")
@@ -21,6 +23,18 @@ LAYERS = ("bronze", "silver", "gold")
 def ensure_layers(spark: SparkSession) -> None:
     for layer in LAYERS:
         spark.sql(f"CREATE SCHEMA IF NOT EXISTS {layer}")
+
+
+def ensure_namespace(spark: SparkSession, namespace: str) -> None:
+    """Create database ``namespace`` if it is missing. The name is
+    interpolated into DDL, so anything but a plain SQL identifier is
+    rejected with ``ValueError``."""
+    if not re.fullmatch(r"[A-Za-z_][A-Za-z0-9_]*", namespace):
+        raise ValueError(
+            f"namespace {namespace!r} is not a valid SQL identifier "
+            "(expected [A-Za-z_][A-Za-z0-9_]*)"
+        )
+    spark.sql(f"CREATE DATABASE IF NOT EXISTS {namespace}")
 
 
 def table_exists(spark: SparkSession, name: str) -> bool:
@@ -58,7 +72,6 @@ def read_table(spark: SparkSession, name: str) -> DataFrame:
 
 def _versions(path: str) -> list[int]:
     import os
-    import re
 
     if not os.path.isdir(path):
         return []

@@ -20,7 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from personal_data_lakehouse_spark.catalog import write_table
+from personal_data_lakehouse_spark.catalog import ensure_namespace, write_table
 from personal_data_lakehouse_spark.dedup.cluster import dedup_clusters
 from personal_data_lakehouse_spark.dedup.exact import exact_dedup
 from personal_data_lakehouse_spark.dedup.minhash import lsh_candidate_pairs
@@ -188,14 +188,7 @@ def corpus_pipeline(
 ) -> dict[str, int]:
     """Run the full corpus DAG, persisting every stage as a managed table
     under ``namespace`` and returning the per-stage retention funnel."""
-    import re
-
-    if not re.fullmatch(r"[A-Za-z_][A-Za-z0-9_]*", namespace):
-        raise ValueError(
-            f"namespace {namespace!r} is not a valid SQL identifier "
-            "(expected [A-Za-z_][A-Za-z0-9_]*)"
-        )
-    spark.sql(f"CREATE DATABASE IF NOT EXISTS {namespace}")
+    ensure_namespace(spark, namespace)
     stages: dict[str, int] = {"raw": docs.count()}
 
     cleaned = intake(docs)

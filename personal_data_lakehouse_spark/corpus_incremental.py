@@ -1,16 +1,18 @@
 """Incremental corpus-pipeline runs: MERGE a new-docs batch through the
-full intake → exact-dedup → near-dedup funnel against EXISTING stage
-tables, with the merged end state provably equal to a full recompute
-over the union.
+intake → exact-dedup → near-dedup (→ semantic-dedup) funnel against
+EXISTING stage tables, with the merged end state provably equal to a
+full recompute over the union.
 
 This is the reference's defining semantic — watermark-incremental
 processing (pipelines/stock_api/transforme_stock_silver.py:41-97) and
 dedup-on-append MERGE (ingest_stocks.py:84-100) — applied to the
 capstone ``corpus.corpus_pipeline``: a daily crawl delta must flow
-through the same gates and dedup decisions WITHOUT re-shingling or
-re-fingerprinting the existing corpus.
+through the same gates and dedup decisions WITHOUT re-shingling,
+re-fingerprinting or re-embedding the existing corpus.
 
-The persisted state is five stage tables (``CorpusState``):
+The persisted state is one type, ``CorpusState``: five lexical stage
+tables, plus two semantic ones when the deploy runs SemDeDup in the
+funnel:
 
 * ``fp``        — (fp, keep_id): the exact-dedup fingerprint ledger;
 * ``shingles``  — (doc_id, shingles): the LSH Jaccard-verify side;
@@ -19,12 +21,19 @@ The persisted state is five stage tables (``CorpusState``):
 * ``skeleton``  — (doc_id, source, tok): exact-kept survivors with
   their stored whitespace-token counts — every downstream stage
   (closure, rebalance, split, pack, rollup) runs on this id+int
-  skeleton, never re-reading text.
+  skeleton, never re-reading text;
+* ``cells``     — (doc_id, e array<float>, _vn double, cell), optional:
+  the IVF cell index over survivors' embeddings — vector + precomputed
+  norm stored WITH the cell id, exactly what the batch probe needs (the
+  online admit loop's sink carries the same columns);
+* ``sem_edges`` — (id_a, id_b), optional: verified semantic near-dup
+  edges (rounded cosine ≥ ``SEM_THRESHOLD``, id_a < id_b).
 
-The V2 state (r10) adds the SEMANTIC stage: ``cells`` (the IVF vector
-cell index over survivors' embeddings) and ``sem_edges`` (verified
-embedding-cosine near-dup edges); the derived closure then merges
-lexical ∪ semantic edges. See ``CorpusStateV2`` below.
+The semantic stage is chosen by the data, not a flag: a build runs it
+when it is given embeddings and a codebook; an increment runs it exactly
+when the state carries ``cells`` (and then needs the batch's embeddings
+and the same codebook); the rollup's closure covers lexical ∪ semantic
+edges whenever ``sem_edges`` is present.
 
 Incrementality contract (the append-only id invariant): every batch
 doc_id must EXCEED every id already in the state. Under that invariant
@@ -36,22 +45,31 @@ function that appends cannot retro-flip at the STAGE-TABLE level:
   displace a stored keeper, so the ledger only gains rows (insert-only
   MERGE), and a batch doc whose fp is already in the ledger is dropped
   exactly as the full rebuild drops it;
-* LSH banding is a pure per-document function — the stored band index
-  rows for base docs are what a rebuild would recompute; new candidate
-  pairs are exactly the pairs a rebuild would add (batch×corpus via the
-  stored index, batch×batch via self-join), so the edge table also only
-  gains rows;
+* LSH banding and cell assignment are pure per-document functions — the
+  stored index rows for base docs are what a rebuild would recompute;
+  new candidate pairs are exactly the pairs a rebuild would add
+  (batch×corpus via the stored index, batch×batch via self-join), so
+  both edge tables also only gain rows;
 * what CAN flip is the DERIVED canonical decision (a batch doc bridging
-  two existing clusters merges them, re-pointing cluster minima) and
-  the rebalance thresholds (global per-source counts move) — so those
-  are recomputed from the merged SPARSE state (edge closure + skeleton
-  counts) per run, never stored as if append-stable.
+  two existing clusters — lexical, semantic, or one of each — merges
+  them, re-pointing cluster minima) and the rebalance thresholds
+  (global per-source counts move) — so those are recomputed from the
+  merged SPARSE state (edge closure + skeleton counts) per run, never
+  stored as if append-stable.
 
-Work per increment: O(batch text) for gates/fingerprints/shingles, O(new
-candidate pairs) for verification, O(total edges) for the closure (the
-adaptive ``connected_components`` — edges are the sparse edge-incident
-subgraph, not the corpus), O(survivor ids) for rebalance/split/pack. The
-100 TB corpus' TEXT is touched exactly once per document, at the
+One increment produces one set of per-table INSERTS
+(``IncrementResult.inserts``). The merged state is
+``merge_insert_only(stored, insert)`` per table, built lazily; the
+managed-table flavor (``run_increment``) checkpoints and MERGEs only the
+inserts, so each table's insert-only anti-join runs once, inside
+``merge_into_table``.
+
+Work per increment: O(batch text) for gates/fingerprints/shingles,
+O(batch vectors) for cell assignment, O(new candidate pairs) for
+verification, O(total edges) for the closure (the adaptive
+``connected_components`` — edges are the sparse edge-incident subgraph,
+not the corpus), O(survivor ids) for rebalance/split/pack. The 100 TB
+corpus' TEXT and VECTORS are touched exactly once per document, at the
 increment that ingested it.
 
 Reference parity: transforme_stock_silver.py:41-97 (incremental filter),
@@ -66,6 +84,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from personal_data_lakehouse_spark.catalog import ensure_namespace
 from personal_data_lakehouse_spark.corpus import (
     dedup_exact_stage,
     intake,
@@ -80,28 +99,41 @@ from personal_data_lakehouse_spark.dedup.minhash import lsh_index
 from personal_data_lakehouse_spark.functions.text import (
     token_count_whitespace,
 )
-from personal_data_lakehouse_spark.operators.merge import merge_insert_only
+from personal_data_lakehouse_spark.operators.merge import (
+    merge_insert_only,
+    merge_into_table,
+)
 
 NEAR_THRESHOLD = 0.5  # verified-Jaccard keep bound, same as corpus.py
+
+SEM_THRESHOLD = 0.3
+"""Rounded-cosine keep bound for semantic edges. 0.3 (vs the standalone
+``t_semdedup_clusters``' 0.4) so the fixture exercises BOTH incremental
+pair generators naturally at both differential-gate SFs — measured over
+the exact-kept survivors: batch×corpus bridges 46 (sf0.001) / 48
+(sf0.01) and batch×batch pairs 5 / 5 at 0.3, versus 5 / 3 bridges and
+ZERO batch×batch pairs at 0.4 (the v2-admit threshold precedent,
+plans/round9_ops.py:157)."""
 
 
 @dataclass
 class CorpusState:
-    """The five persisted stage tables of an incremental corpus deploy."""
+    """The persisted stage tables of an incremental corpus deploy: the
+    five lexical tables, plus ``cells``/``sem_edges`` when the deploy
+    runs the semantic stage."""
 
     fp: DataFrame
     shingles: DataFrame
     bands: DataFrame
     edges: DataFrame
     skeleton: DataFrame
+    cells: DataFrame | None = None
+    sem_edges: DataFrame | None = None
 
     def frames(self) -> dict[str, DataFrame]:
+        """The tables this state carries, by name (absent ones omitted)."""
         return {
-            "fp": self.fp,
-            "shingles": self.shingles,
-            "bands": self.bands,
-            "edges": self.edges,
-            "skeleton": self.skeleton,
+            n: f for n in STATE_KEYS if (f := getattr(self, n)) is not None
         }
 
 
@@ -114,6 +146,8 @@ STATE_KEYS: dict[str, list[str]] = {
     "bands": ["doc_id", "band"],
     "edges": ["id_a", "id_b"],
     "skeleton": ["doc_id"],
+    "cells": ["doc_id"],
+    "sem_edges": ["id_a", "id_b"],
 }
 
 
@@ -121,20 +155,18 @@ class _LazyCorpusState(CorpusState):
     """``CorpusState`` whose fields may be ZERO-ARG THUNKS, resolved (and
     memoized) on first attribute access.
 
-    r13 optimization (guide §1.2 order-1, §7.3 planning cost — VERDICT
-    r12 directive #1): every DataFrame operation pays Catalyst analysis
-    eagerly at construction, so building all five merged-state frames
-    per increment charges consumers that read only a subset — the
-    derived-decision rollup consumes skeleton+edges, yet paid the
-    fp/shingles/bands merge analyses on every invocation. A thunk field
-    defers that cost to first access; consumers that force everything
-    (``frames()`` — the stream loop's per-batch checkpoint barrier, the
-    managed-table MERGE) behave exactly as before. The resolved frame is
+    PySpark pays Catalyst analysis eagerly at DataFrame construction, so
+    building every merged-state frame per increment charges consumers
+    that read only a subset — the derived-decision rollup reads skeleton,
+    edges and (semantic) sem_edges, never fp/shingles/bands/cells. A
+    thunk field defers that cost to first access; consumers that force
+    everything (``frames()`` — the stream loop's per-batch checkpoint
+    barrier) behave exactly as with eager frames. The resolved frame is
     written back to the instance, so repeated access analyses once.
 
-    Plain-``DataFrame`` fields pass through untouched, which keeps
-    ``dataclasses.replace`` working: it forces every field (via getattr)
-    and rebuilds an instance holding materialized frames.
+    Plain-``DataFrame`` (and ``None``) fields pass through untouched,
+    which keeps ``dataclasses.replace`` working: it forces every field
+    (via getattr) and rebuilds an instance holding materialized frames.
     """
 
     def __getattribute__(self, name):
@@ -143,6 +175,26 @@ class _LazyCorpusState(CorpusState):
             val = val()
             object.__setattr__(self, name, val)
         return val
+
+
+@dataclass
+class IncrementResult:
+    """A build's or increment's full return: the (merged) state, the rows
+    each table gains (``inserts`` — for a build, the whole state), and
+    the run's INTERNAL persisted frames, so callers can ``release()``
+    them once their materialization barrier has passed (a loop of
+    increments otherwise accretes cached frames per batch)."""
+
+    state: CorpusState
+    inserts: dict[str, DataFrame]
+    persisted: list[DataFrame]
+
+    def release(self) -> None:
+        """Unpersist the run's internal caches. Call only AFTER the state
+        or inserts have been materialized (localCheckpoint / table write)
+        — their lineage reads through these caches."""
+        for frame in self.persisted:
+            frame.unpersist()
 
 
 def _skeleton(kept: DataFrame) -> DataFrame:
@@ -164,26 +216,82 @@ def _verified_pairs(cand: DataFrame, threshold: float) -> DataFrame:
     return cand.filter(j >= F.lit(threshold)).select("id_a", "id_b")
 
 
-def build_state(docs: DataFrame) -> CorpusState:
+def _doc_cells(
+    kept_ids: DataFrame, emb: DataFrame, cents: DataFrame
+) -> DataFrame:
+    """Cell-index rows for the given survivor ids, coalesced to the core
+    count and persisted (every consumer — pair self-join, probe, MERGE —
+    reads it more than once): join doc_id ↔ the embeddings table's
+    vec_id (the fixture's 1:1 document-embedding key), then the standard
+    nearest-centroid assignment (broadcast codebook,
+    ``similarity.ivf.assign_cells`` — norms materialized once). Documents
+    without an embedding row simply contribute no semantic edges."""
+    from personal_data_lakehouse_spark.similarity.ivf import assign_cells
+
+    vecs = emb.select(
+        F.col("vec_id").alias("doc_id"), F.col("embedding").alias("e")
+    ).join(kept_ids.select("doc_id"), "doc_id")
+    npart = emb.sparkSession.sparkContext.defaultParallelism
+    return assign_cells(vecs, cents, "doc_id", "e").coalesce(npart).persist()
+
+
+def _sem_pairs(a_cells: DataFrame, b_cells: DataFrame) -> DataFrame:
+    """Cell-local verified semantic pairs between two cell-index frames
+    (id_a from ``a_cells`` < id_b from ``b_cells``): one dot per pair
+    against the stored norms, round(·, 6) ≥ SEM_THRESHOLD — the same
+    arithmetic contract as ``ivf_blocked_neardup`` and the DuckDB
+    oracle's ``_cos`` fragment."""
+    from personal_data_lakehouse_spark.similarity.brute_force import dot_expr
+
+    a = a_cells.select(
+        "cell",
+        F.col("doc_id").alias("id_a"),
+        F.col("e").alias("va"),
+        F.col("_vn").alias("_na"),
+    )
+    b = b_cells.select(
+        "cell",
+        F.col("doc_id").alias("id_b"),
+        F.col("e").alias("vb"),
+        F.col("_vn").alias("_nb"),
+    )
+    sim = F.round(
+        F.expr(dot_expr("va", "vb")) / (F.col("_na") * F.col("_nb")), 6
+    )
+    return (
+        a.join(b, "cell")
+        .filter(F.col("id_a") < F.col("id_b"))
+        .filter(sim >= F.lit(SEM_THRESHOLD))
+        .select("id_a", "id_b")
+    )
+
+
+def build_state(
+    docs: DataFrame,
+    emb: DataFrame | None = None,
+    cents: DataFrame | None = None,
+) -> CorpusState:
     """Full pipeline run over the BASE corpus, returning the stage tables
-    an incremental deployment persists. One-time (or backfill) cost."""
-    return build_state_detailed(docs).state
+    an incremental deployment persists. One-time (or backfill) cost.
+    With *emb* (the embeddings table) and *cents* (the IVF codebook) the
+    state also carries the semantic ``cells``/``sem_edges`` tables."""
+    return build_state_detailed(docs, emb, cents).state
 
 
-def build_state_detailed(docs: DataFrame) -> "IncrementResult":
-    """``build_state`` plus the handles the v2 (semantic) extension and
-    materializing callers need: ``batch_kept`` carries the exact-kept
-    survivors (here the whole base corpus' — the "batch" is the backfill),
-    ``persisted`` the internal LSH doc cache to release after the tables
-    are written."""
-    # r12 optimization (guide §1.2/§2.4): persist the gated corpus and the
-    # exact-kept survivors — ``base`` feeds the fingerprint ledger branch
-    # AND both sides of the exact-dedup join-back, ``kept`` feeds the LSH
-    # index build, the skeleton and (v2) the cell assignment; unpersisted,
-    # each branch re-ran the corpus intake/fingerprint text work. These
-    # are the intake/dedup_exact stage tables the managed pipeline writes
-    # (corpus_pipeline) — the persist is their lazy-composition form;
-    # both release via the IncrementResult barrier contract.
+def build_state_detailed(
+    docs: DataFrame,
+    emb: DataFrame | None = None,
+    cents: DataFrame | None = None,
+) -> IncrementResult:
+    """``build_state`` plus the internal caches to release once the
+    caller has materialized (checkpointed/written) the state."""
+    # Persist the gated corpus and the exact-kept survivors — ``base``
+    # feeds the fingerprint ledger branch AND both sides of the
+    # exact-dedup join-back, ``kept`` feeds the LSH index build, the
+    # skeleton and the cell assignment; unpersisted, each branch re-ran
+    # the corpus intake/fingerprint text work. These are the intake/
+    # dedup_exact stage tables the managed pipeline writes
+    # (corpus_pipeline) — the persist is their lazy-composition form.
     base = intake(docs).persist()
     fp = exact_dedup(base).select("fp", "keep_id")
     kept = dedup_exact_stage(base).persist()
@@ -216,83 +324,73 @@ def build_state_detailed(docs: DataFrame) -> "IncrementResult":
             "id_b",
         )
     )
-    edges = _verified_pairs(cand, NEAR_THRESHOLD)
     state = CorpusState(
         fp=fp,
         shingles=shingles,
         bands=banded.select("doc_id", "band", "bucket"),
-        edges=edges,
+        edges=_verified_pairs(cand, NEAR_THRESHOLD),
         skeleton=_skeleton(kept),
     )
+    persisted = [lsh_docs, base, kept]
+    if emb is not None:
+        state.cells = _doc_cells(kept, emb, cents)
+        state.sem_edges = _sem_pairs(state.cells, state.cells)
+        persisted.append(state.cells)
     return IncrementResult(
-        state=state, batch_kept=kept, persisted=[lsh_docs, base, kept]
+        state=state, inserts=state.frames(), persisted=persisted
     )
-
-
-@dataclass
-class IncrementResult:
-    """``apply_increment_detailed``'s full return: the merged state plus
-    the batch's exact-kept survivors (the frame downstream semantic /
-    v2 stages index — r10) and the increment's INTERNAL persisted frames
-    (the batch LSH doc aggregate), so callers that loop increments can
-    ``unpersist()`` them once the per-batch materialization barrier has
-    passed (r9 ADVICE: the streaming loop otherwise accretes one cached
-    frame per micro-batch on an unbounded stream)."""
-
-    state: CorpusState
-    batch_kept: DataFrame
-    persisted: list[DataFrame]
-
-    def release(self) -> None:
-        """Unpersist the increment's internal caches. Call only AFTER the
-        merged state has been materialized (localCheckpoint / table
-        write) — the merged frames' lineage reads through these caches."""
-        for frame in self.persisted:
-            frame.unpersist()
 
 
 def apply_increment(
-    state: CorpusState, batch_docs: DataFrame, threshold: float = NEAR_THRESHOLD
+    state: CorpusState,
+    batch_docs: DataFrame,
+    emb: DataFrame | None = None,
+    cents: DataFrame | None = None,
+    threshold: float = NEAR_THRESHOLD,
 ) -> CorpusState:
     """Process ONE new-docs batch against the existing state and return
-    the MERGED state (all five tables via insert-only MERGE).
+    the MERGED state (every table via insert-only MERGE).
 
-    Only the batch's text is gated/fingerprinted/shingled; the corpus
-    side is the stored index. Idempotent: re-applying a batch whose
-    fingerprints are already in the ledger inserts nothing anywhere
-    (the replay property ``tests/test_corpus_incremental.py`` pins).
-    """
-    return apply_increment_detailed(state, batch_docs, threshold).state
+    Only the batch's text is gated/fingerprinted/shingled and only the
+    batch's vectors are assigned; the corpus side is the stored index.
+    *emb*/*cents* (the batch's embeddings and the build's codebook) are
+    required exactly when the state carries ``cells``. Idempotent:
+    re-applying a batch whose fingerprints are already in the ledger
+    inserts nothing anywhere (the replay property
+    ``tests/test_corpus_incremental.py`` pins)."""
+    return apply_increment_detailed(
+        state, batch_docs, emb, cents, threshold
+    ).state
 
 
 def apply_increment_detailed(
-    state: CorpusState, batch_docs: DataFrame, threshold: float = NEAR_THRESHOLD
+    state: CorpusState,
+    batch_docs: DataFrame,
+    emb: DataFrame | None = None,
+    cents: DataFrame | None = None,
+    threshold: float = NEAR_THRESHOLD,
 ) -> IncrementResult:
-    """``apply_increment`` plus the handles loops and v2 stages need —
-    see ``IncrementResult``. The merged-state plans are identical to
-    ``apply_increment``'s (this IS its body; the thin wrapper above keeps
-    the one-result signature)."""
+    """``apply_increment`` plus the per-table inserts and the internal
+    caches loops must release — see ``IncrementResult``."""
     from personal_data_lakehouse_spark.functions.text import fingerprint
 
+    if (state.cells is None) != (emb is None):
+        raise ValueError(
+            "pass the batch's embeddings exactly when the state carries "
+            "the semantic tables (cells/sem_edges)"
+        )
     b_in = intake(batch_docs)
     # exact dedup vs the ledger: fingerprints already present keep their
     # stored (smaller-id) keeper; genuinely new fingerprints keep the
     # batch-min id — together exactly the union's min-id-per-fp rule.
     b_fpd = b_in.withColumn("fp", fingerprint("text"))
-    # r12 optimization (guide §1.2/§2.4): persist the anti-joined batch —
-    # the fp-ledger merge (via b_keep) and the survivor join both consume
-    # it, and each unpersisted consumer re-ran the batch intake gates +
-    # text fingerprint + ledger anti-join. Batch-sized; released by the
-    # IncrementResult barrier contract like the other increment caches.
+    # Persist the anti-joined batch and its exact-kept survivors: the
+    # ledger insert, the survivor join, the LSH index build, the skeleton
+    # and the cell assignment consume them, and each unpersisted consumer
+    # re-ran the batch intake gates + text fingerprint + ledger anti-join.
+    # Batch-sized; released by the IncrementResult barrier contract.
     b_new = b_fpd.join(state.fp.select("fp"), "fp", "left_anti").persist()
     b_keep = b_new.groupBy("fp").agg(F.min("doc_id").alias("keep_id"))
-    # r12 optimization (guide §1.2/§2.4): persist the batch's exact-kept
-    # survivors — consumed by the LSH index build, the skeleton merge and
-    # (v2) the cell assignment; unpersisted, each consumer re-ran the
-    # intake gates + text fingerprint + ledger anti-join over the batch
-    # (~3 full batch-text passes per increment, ×batches in the stream
-    # loop). The cache is batch-sized (a daily delta), released by the
-    # standing ``IncrementResult.release()`` barrier contract.
     b_kept = (
         b_new.join(b_keep.select(F.col("keep_id").alias("doc_id")), "doc_id")
         .drop("fp")
@@ -350,35 +448,37 @@ def apply_increment_detailed(
             "id_b",
         )
     )
-    new_edges = _verified_pairs(cand, threshold)
-
-    # r13 (guide §1.2/§7.3, VERDICT r12 directive #1): the merged frames
-    # are THUNKS — a consumer pays Catalyst analysis only for the tables
-    # it reads (the rollup reads skeleton+edges; the stream/MERGE paths
-    # force all five via frames() exactly as before). Same expressions,
-    # same results, deferred construction.
+    inserts = {
+        "fp": b_keep,
+        "shingles": b_sh,
+        "bands": b_banded.select("doc_id", "band", "bucket"),
+        "edges": _verified_pairs(cand, threshold),
+        "skeleton": _skeleton(b_kept),
+    }
+    persisted = [b_docs, b_new, b_kept]
+    if state.cells is not None:
+        # batch-only cell assignment; batch×corpus pairs probe the STORED
+        # index (its ids are the id_a side — every stored id is smaller
+        # under the append-only invariant, and the id_a < id_b filter is
+        # the same contract-violation defense as the band probe's), plus
+        # batch×batch. Disjoint by the invariant → plain union, no dedup.
+        b_cells = _doc_cells(b_kept, emb, cents)
+        inserts["cells"] = b_cells
+        inserts["sem_edges"] = _sem_pairs(state.cells, b_cells).unionByName(
+            _sem_pairs(b_cells, b_cells)
+        )
+        persisted.append(b_cells)
+    # thunks: a consumer pays Catalyst analysis only for the merged tables
+    # it reads (the rollup reads skeleton + edges (+ sem_edges))
     merged = _LazyCorpusState(
-        fp=lambda: merge_insert_only(state.fp, b_keep, STATE_KEYS["fp"]),
-        shingles=lambda: merge_insert_only(
-            state.shingles, b_sh, STATE_KEYS["shingles"]
-        ),
-        bands=lambda: merge_insert_only(
-            state.bands,
-            b_banded.select("doc_id", "band", "bucket"),
-            STATE_KEYS["bands"],
-        ),
-        edges=lambda: merge_insert_only(
-            state.edges, new_edges, STATE_KEYS["edges"]
-        ),
-        skeleton=lambda: merge_insert_only(
-            state.skeleton, _skeleton(b_kept), STATE_KEYS["skeleton"]
-        ),
+        **{
+            n: lambda n=n: merge_insert_only(
+                getattr(state, n), inserts[n], STATE_KEYS[n]
+            )
+            for n in inserts
+        }
     )
-    # persisted: the batch LSH doc aggregate + the anti-joined batch +
-    # the batch survivors (r12)
-    return IncrementResult(
-        state=merged, batch_kept=b_kept, persisted=[b_docs, b_new, b_kept]
-    )
+    return IncrementResult(state=merged, inserts=inserts, persisted=persisted)
 
 
 @dataclass
@@ -389,7 +489,7 @@ class RollupResult:
     Registered-query callers stay covered by the harness clearCache
     contract; LOOPING callers (an increment-then-rollup-per-batch
     driver) must ``release()`` after their barrier or one cached frame
-    pair accretes per call (the r9 ADVICE leak class)."""
+    pair accretes per call."""
 
     rollup: DataFrame
     persisted: list[DataFrame]
@@ -399,26 +499,47 @@ class RollupResult:
             frame.unpersist()
 
 
-def _rollup_from(
-    skeleton: DataFrame, edges: DataFrame, budget: int
+def state_rollup(state: CorpusState, budget: int = 512) -> DataFrame:
+    """Recompute the DERIVED pipeline decisions from the merged state and
+    roll up the end state per (source, split) — the same hashed surface
+    as ``t_corpus_pipeline_e2e`` (``corpus.pipeline_rollup``).
+
+    Derived per run because appends CAN flip them: the near-dup closure
+    (a batch doc may bridge two existing clusters, re-pointing cluster
+    minima — previously-canonical base docs lose the flag) and the
+    temperature-rebalance thresholds (global per-source counts moved).
+    Both run on the sparse state: the closure on the edge table(s), the
+    rest on the id+int skeleton — no text and no vectors are read here.
+
+    Internal persists (merged skeleton, canonical survivors) have no
+    release path through THIS signature — the registered queries rely on
+    the harness clearCache contract; a looping caller should use
+    ``state_rollup_detailed`` and ``release()`` after materializing."""
+    return state_rollup_detailed(state, budget).rollup
+
+
+def state_rollup_detailed(
+    state: CorpusState, budget: int = 512
 ) -> RollupResult:
-    """The shared derived-decision chain over (skeleton, edges) — the
-    single body behind ``state_rollup`` and ``state_rollup_v2`` (the two
-    parity rollups cannot drift)."""
-    # r13 (VERDICT r12 directive #4, guide §2.4): persist the MERGED
-    # skeleton — both the closure's roster (the corpus-side left join in
-    # dedup_clusters) and the survivor join consume it, and each
-    # consumer's two-branch merge subtree re-scanned the skeleton
-    # artifact (4 scans per invocation in the r12 after-plan); cached,
-    # the merge executes once. id+int rows — survivor-count-sized at any
-    # corpus scale; on a cluster this is the written stage table.
-    skel = skeleton.persist()
+    """``state_rollup`` plus the releasable persist handles. With the
+    semantic tables present the closure runs over lexical ∪ semantic
+    edges (UNION-distinct: a pair can be near in both senses)."""
+    edges = state.edges
+    if state.sem_edges is not None:
+        edges = edges.unionByName(state.sem_edges).dropDuplicates(
+            ["id_a", "id_b"]
+        )
+    # Persist the MERGED skeleton — both the closure's roster (the
+    # corpus-side left join in dedup_clusters) and the survivor join
+    # consume it, and each consumer's two-branch merge subtree re-scanned
+    # the skeleton artifact; cached, the merge executes once. id+int rows
+    # — survivor-count-sized at any corpus scale; on a cluster this is
+    # the written stage table.
+    skel = state.skeleton.persist()
     labels = dedup_clusters(skel.select("doc_id"), edges)
-    # r12 optimization (guide §1.2/§2.4): persist the canonical-survivor
-    # skeleton — rebalance consumes it twice (count + keep-join branches)
-    # and the chain re-executed the merged-skeleton subtree once per
-    # branch (measured: 12 skeleton/fp/batch-documents scans in one
-    # incremental invocation; after: the merge subtree runs once).
+    # Persist the canonical-survivor skeleton — rebalance consumes it
+    # twice (count + keep-join branches), and unpersisted the chain
+    # re-executed the merged-skeleton subtree once per branch.
     survivors = skel.join(
         labels.filter(F.col("is_canonical")).select("doc_id"), "doc_id"
     ).persist()
@@ -431,451 +552,96 @@ def _rollup_from(
     )
 
 
-def state_rollup(state: CorpusState, budget: int = 512) -> DataFrame:
-    """Recompute the DERIVED pipeline decisions from the merged state and
-    roll up the end state per (source, split) — the same hashed surface
-    as ``t_corpus_pipeline_e2e`` (``corpus.pipeline_rollup``).
-
-    Derived per run because appends CAN flip them: the near-dup closure
-    (a batch doc may bridge two existing clusters, re-pointing cluster
-    minima — previously-canonical base docs lose the flag) and the
-    temperature-rebalance thresholds (global per-source counts moved).
-    Both run on the sparse state: the closure on the edge table, the
-    rest on the id+int skeleton — no text is read here.
-
-    Internal persists (merged skeleton, canonical survivors) have no
-    release path through THIS signature — the registered queries rely on
-    the harness clearCache contract; a looping caller should use
-    ``state_rollup_detailed`` and ``release()`` after materializing."""
-    return state_rollup_detailed(state, budget).rollup
-
-
-def state_rollup_detailed(
-    state: CorpusState, budget: int = 512
-) -> RollupResult:
-    """``state_rollup`` plus the releasable persist handles (r12 ADVICE:
-    the rollup's internal persists previously leaked in increment loops)."""
-    return _rollup_from(state.skeleton, state.edges, budget)
-
-
-# ---------------------------------------------------------------------------
-# V2: the SEMANTIC (embedding) stage in the incremental state (r10,
-# VERDICT r9 "What's missing #1" / directive #2). The persisted state
-# gains the two artifacts the ONLINE admit loop already maintains
-# per-batch (plans/round9_ops.online_semdedup_admit): the vector cell
-# index and the verified semantic edge table. A daily-delta deployment
-# then gets SemDeDup in the funnel WITHOUT re-embedding or re-pairing
-# the corpus: the batch assigns its own cells, probes the stored index
-# for batch×corpus pairs (cell-local), self-joins for batch×batch, and
-# the derived closure merges lexical AND semantic edges.
-#
-# The append-only id invariant covers the semantic tables for the same
-# reason it covers the lexical ones: cell assignment is a pure
-# per-document function (stored rows are exactly what a rebuild would
-# recompute), and the cell-local pair set over (base ∪ batch) is exactly
-# stored-pairs ∪ batch×corpus ∪ batch×batch — so both tables only gain
-# rows (insert-only MERGE), while the decisions appends CAN flip (a batch
-# doc bridging a LEXICAL cluster and a SEMANTIC cluster merges them) are
-# recomputed from the merged sparse edges per run.
-
-SEM_THRESHOLD = 0.3
-"""Rounded-cosine keep bound for semantic edges. 0.3 (vs the standalone
-``t_semdedup_clusters``' 0.4) so the fixture exercises BOTH incremental
-pair generators naturally at both differential-gate SFs — measured over
-the exact-kept survivors: batch×corpus bridges 46 (sf0.001) / 48
-(sf0.01) and batch×batch pairs 5 / 5 at 0.3, versus 5 / 3 bridges and
-ZERO batch×batch pairs at 0.4 (the v2-admit threshold precedent,
-plans/round9_ops.py:157)."""
-
-
-@dataclass
-class CorpusStateV2:
-    """The v1 lexical state plus the two semantic stage tables:
-
-    * ``cells``     — (doc_id, e array<float>, _vn double, cell): the IVF
-      cell index over exact-kept survivors' embeddings — vector + its
-      precomputed norm stored WITH the cell id, exactly what the probe
-      needs (the production IVF index shape; the online admit loop's
-      sink carries the same columns, round9_ops._V2_DEC_SCHEMA);
-    * ``sem_edges`` — (id_a, id_b): verified semantic near-dup edges
-      (rounded cosine ≥ ``SEM_THRESHOLD``, id_a < id_b).
-    """
-
-    lex: CorpusState
-    cells: DataFrame
-    sem_edges: DataFrame
-
-    def frames(self) -> dict[str, DataFrame]:
-        return {
-            **self.lex.frames(),
-            "cells": self.cells,
-            "sem_edges": self.sem_edges,
-        }
-
-
-STATE_KEYS_V2: dict[str, list[str]] = {
-    **STATE_KEYS,
-    "cells": ["doc_id"],
-    "sem_edges": ["id_a", "id_b"],
-}
-
-
-class _LazyCorpusStateV2(CorpusStateV2):
-    """``CorpusStateV2`` with thunk-able ``cells``/``sem_edges`` fields —
-    the v2 counterpart of ``_LazyCorpusState`` (same contract: resolve
-    and memoize on first access; the v2 rollup reads skeleton, lexical
-    edges and sem_edges, so the cells merge is analyzed only by
-    consumers that actually read it)."""
-
-    _V2_LAZY = ("cells", "sem_edges")
-
-    def __getattribute__(self, name):
-        val = object.__getattribute__(self, name)
-        if name in _LazyCorpusStateV2._V2_LAZY and callable(val):
-            val = val()
-            object.__setattr__(self, name, val)
-        return val
-
-
-def _doc_cells(
-    kept_ids: DataFrame, emb: DataFrame, cents: DataFrame
-) -> DataFrame:
-    """Cell-index rows for the given survivor ids: join doc_id ↔ the
-    embeddings table's vec_id (the fixture's 1:1 document-embedding key),
-    then the standard nearest-centroid assignment (broadcast codebook,
-    ``similarity.ivf.assign_cells`` — norms materialized once). Documents
-    without an embedding row simply contribute no semantic edges."""
-    from personal_data_lakehouse_spark.similarity.ivf import assign_cells
-
-    vecs = emb.select(
-        F.col("vec_id").alias("doc_id"), F.col("embedding").alias("e")
-    ).join(kept_ids.select("doc_id"), "doc_id")
-    return assign_cells(vecs, cents, "doc_id", "e")
-
-
-def _sem_pairs(a_cells: DataFrame, b_cells: DataFrame) -> DataFrame:
-    """Cell-local verified semantic pairs between two cell-index frames
-    (id_a from ``a_cells`` < id_b from ``b_cells``): one dot per pair
-    against the stored norms, round(·, 6) ≥ SEM_THRESHOLD — the same
-    arithmetic contract as ``ivf_blocked_neardup`` and the DuckDB
-    oracle's ``_cos`` fragment."""
-    from personal_data_lakehouse_spark.similarity.brute_force import dot_expr
-
-    a = a_cells.select(
-        "cell",
-        F.col("doc_id").alias("id_a"),
-        F.col("e").alias("va"),
-        F.col("_vn").alias("_na"),
-    )
-    b = b_cells.select(
-        "cell",
-        F.col("doc_id").alias("id_b"),
-        F.col("e").alias("vb"),
-        F.col("_vn").alias("_nb"),
-    )
-    sim = F.round(
-        F.expr(dot_expr("va", "vb")) / (F.col("_na") * F.col("_nb")), 6
-    )
-    return (
-        a.join(b, "cell")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .filter(sim >= F.lit(SEM_THRESHOLD))
-        .select("id_a", "id_b")
-    )
-
-
-def build_state_v2(
-    docs: DataFrame, emb: DataFrame, cents: DataFrame
-) -> CorpusStateV2:
-    """Full v2 pipeline run over the BASE corpus: the lexical five-table
-    state plus the semantic cell index and base×base semantic edges over
-    the exact-kept survivors. The cell index is persisted (coalesce-first
-    idiom) because the edge self-join consumes it twice and the state
-    returns it once more. Callers that materialize-and-move-on (bench,
-    state loops) should use ``build_state_v2_detailed`` and ``release()``
-    the build's internal persists after their checkpoint barrier."""
-    return build_state_v2_detailed(docs, emb, cents).state  # type: ignore[return-value]
-
-
-def build_state_v2_detailed(
-    docs: DataFrame, emb: DataFrame, cents: DataFrame
-) -> IncrementResult:
-    """``build_state_v2`` plus the detailed contract: ``persisted``
-    carries the lexical build's internal caches AND the cell index, all
-    releasable once the caller has materialized (checkpointed/written)
-    the state — without it a build-then-discard loop accretes one cached
-    cell frame per rebuild (the r9 ADVICE class of leak)."""
-    built = build_state_detailed(docs)
-    npart = docs.sparkSession.sparkContext.defaultParallelism
-    cells = (
-        _doc_cells(built.batch_kept.select("doc_id"), emb, cents)
-        .coalesce(npart)
-        .persist()
-    )
-    state = CorpusStateV2(
-        lex=built.state,
-        cells=cells,
-        sem_edges=_sem_pairs(cells, cells),
-    )
-    return IncrementResult(
-        state=state,  # type: ignore[arg-type]
-        batch_kept=built.batch_kept,
-        persisted=built.persisted + [cells],
-    )
-
-
-def apply_increment_v2(
-    state: CorpusStateV2,
-    batch_docs: DataFrame,
-    emb: DataFrame,
-    cents: DataFrame,
-    threshold: float = NEAR_THRESHOLD,
-) -> CorpusStateV2:
-    """One new-docs batch MERGEd through the LEXICAL funnel (exactly
-    ``apply_increment``) AND the SEMANTIC stage: the batch's exact-kept
-    survivors are embedded-probed-verified against the STORED cell index
-    (batch×corpus, cell-local) and against themselves (batch×batch), and
-    all seven tables merge insert-only. Only batch text is read and only
-    batch vectors are assigned; corpus vectors are touched exactly once
-    per document's lifetime — at the increment that ingested them
-    (their stored (vector, norm, cell) rows ARE the probe side).
-
-    Idempotent like v1: a replayed batch's fingerprints are already in
-    the ledger, so ``batch_kept`` is empty and no table gains rows."""
-    return apply_increment_v2_detailed(
-        state, batch_docs, emb, cents, threshold
-    ).state
-
-
-def apply_increment_v2_detailed(
-    state: CorpusStateV2,
-    batch_docs: DataFrame,
-    emb: DataFrame,
-    cents: DataFrame,
-    threshold: float = NEAR_THRESHOLD,
-) -> IncrementResult:
-    """``apply_increment_v2`` plus the v1 detailed contract (the returned
-    ``IncrementResult.state`` is a ``CorpusStateV2``): ``persisted``
-    carries the batch LSH doc aggregate AND the batch cell index, both
-    releasable after the caller's materialization barrier."""
-    inc = apply_increment_detailed(state.lex, batch_docs, threshold)
-    npart = batch_docs.sparkSession.sparkContext.defaultParallelism
-    # persisted: consumed by the batch×corpus probe, the batch×batch
-    # self-join (twice), and the cells MERGE
-    b_cells = (
-        _doc_cells(inc.batch_kept.select("doc_id"), emb, cents)
-        .coalesce(npart)
-        .persist()
-    )
-    # batch×corpus (stored index is the id_a side — every stored id is
-    # smaller under the append-only invariant; the helper's id_a < id_b
-    # filter doubles as the same contract-violation defense as v1's) and
-    # batch×batch. Disjoint by the invariant → plain union, no dedup.
-    # r13: thunk fields like the v1 merge block — the v2 rollup reads
-    # skeleton/edges/sem_edges, so the cells merge (and the pair-probe
-    # construction when sem_edges goes unread) is analyzed on demand.
-    merged_v2 = _LazyCorpusStateV2(
-        lex=inc.state,
-        cells=lambda: merge_insert_only(
-            state.cells, b_cells, STATE_KEYS_V2["cells"]
-        ),
-        sem_edges=lambda: merge_insert_only(
-            state.sem_edges,
-            _sem_pairs(state.cells, b_cells).unionByName(
-                _sem_pairs(b_cells, b_cells)
-            ),
-            STATE_KEYS_V2["sem_edges"],
-        ),
-    )
-    return IncrementResult(
-        state=merged_v2,  # type: ignore[arg-type]
-        batch_kept=inc.batch_kept,
-        persisted=inc.persisted + [b_cells],
-    )
-
-
-def state_rollup_v2(state: CorpusStateV2, budget: int = 512) -> DataFrame:
-    """The derived decisions over the MERGED edge set — lexical ∪ semantic
-    (UNION-distinct: a pair can be near in both senses) — then the exact
-    v1 rollup. Runs the SAME ``_rollup_from`` body as ``state_rollup``
-    on a lexical edge table unioned with the semantic edges, so the v2
-    and v1 derived stages cannot drift; the closure still runs on a
-    sparse edge table, the rest on the id+int skeleton, no text and no
-    vectors read. (r13: routed through ``_rollup_from`` directly instead
-    of ``dataclasses.replace`` — replace() forces every field of a lazy
-    merged state, re-paying the fp/shingles/bands merge analyses the
-    rollup never reads.) Internal persists: same contract as
-    ``state_rollup`` — use ``state_rollup_v2_detailed`` when looping."""
-    return state_rollup_v2_detailed(state, budget).rollup
-
-
-def state_rollup_v2_detailed(
-    state: CorpusStateV2, budget: int = 512
-) -> RollupResult:
-    """``state_rollup_v2`` plus the releasable persist handles."""
-    merged_edges = (
-        state.lex.edges.unionByName(state.sem_edges)
-        .dropDuplicates(["id_a", "id_b"])
-    )
-    return _rollup_from(state.lex.skeleton, merged_edges, budget)
-
-
 # ---------------------------------------------------------------------------
 # Managed-table flavor: the reference's MERGE-into-warehouse shape
 
 
-def init_state_tables(
-    spark: SparkSession, base_docs: DataFrame, namespace: str = "corpus_inc"
-) -> None:
-    """Materialize the base state as managed stage tables under
-    ``namespace`` (the production backfill)."""
-    import re
-
-    if not re.fullmatch(r"[A-Za-z_][A-Za-z0-9_]*", namespace):
-        raise ValueError(f"invalid namespace {namespace!r}")
-    spark.sql(f"CREATE DATABASE IF NOT EXISTS {namespace}")
-    built = build_state_detailed(base_docs)
-    for name, frame in built.state.frames().items():
-        frame.write.mode("overwrite").saveAsTable(f"{namespace}.{name}")
-    built.release()  # tables written: drop the backfill's internal cache
-
-
-def run_increment(
-    spark: SparkSession, batch_docs: DataFrame, namespace: str = "corpus_inc"
-) -> dict[str, int]:
-    """MERGE one batch into the persisted stage tables and return the
-    per-table row counts after the merge (the increment's funnel).
-
-    Uses ``merge_into_table`` per stage table — the reference's
-    ingest_stocks.py:84-100 MERGE shape (Delta-native when delta-spark is
-    on the classpath, staged-swap parquet otherwise). Idempotent: a
-    replayed batch inserts nothing (every key already present).
-
-    Cache invalidation is SCOPED to this run's own persists (r10, per
-    r9 ADVICE — the previous entry-point ``clearCache()`` dropped every
-    cached frame process-wide): the only CacheManager entries an
-    increment creates are its three internal persists (the batch LSH
-    doc aggregate ``b_docs``, the ledger-anti-joined batch ``b_new``,
-    and the batch exact-kept survivors ``b_kept`` — r12 added the
-    latter two), and entries of that class were the r9 stale-plan bug — a later run's
-    structurally-identical plan matched the previous run's cached entry,
-    which held pre-swap file listings of the stage tables. Releasing
-    them after the localCheckpoint barrier (lineage severed, so the
-    merged frames no longer read through them) leaves nothing for the
-    next increment to collide with, and unrelated caches the caller
-    holds survive. Table-direct caches are already handled by
-    ``merge_into_table``'s post-swap ``refreshTable``. With Delta on the
-    classpath the transactional MERGE invalidates through its own log
-    and both mechanisms are no-op safeguards.
-
-    What the Delta path would strengthen (delta-spark remains
-    uninstallable in this container — r3..r10 env gate, session.
-    delta_available): (1) the staged-swap's crash window (two renames)
-    becomes one atomic commit, so a concurrent reader can never observe
-    the table under its ``__old``/``__staging`` name; (2) the eager
-    source-read inside MERGE makes the pre-swap localCheckpoint a
-    no-op safeguard instead of a correctness requirement; (3) time
-    travel would let the replay test assert version N == version N+1
-    instead of row-set equality. The SEMANTICS proven here (insert-only
-    keyed MERGE, idempotent replay, increment == rebuild) are identical
-    on both paths."""
-    state = CorpusState(
+def load_state_tables(spark: SparkSession, namespace: str) -> CorpusState:
+    """The stage tables stored under ``namespace`` (semantic ones only
+    when the namespace has them)."""
+    return CorpusState(
         **{
             n: spark.read.table(f"{namespace}.{n}")
             for n in STATE_KEYS
+            if spark.catalog.tableExists(f"{namespace}.{n}")
         }
     )
-    inc = apply_increment_detailed(state, batch_docs)
-    from personal_data_lakehouse_spark.operators.merge import merge_into_table
-
-    # Sever lineage BEFORE any table swap: the merged frames read the
-    # stage tables lazily BY NAME, so swapping table 1 would silently
-    # change what frames 2..5 compute (e.g. the edge frame re-reading an
-    # already-updated fp ledger finds no new fingerprints). With Delta on
-    # the classpath the native transactional MERGE reads the source
-    # eagerly inside one commit and this is a no-op safeguard.
-    frames = {
-        n: f.localCheckpoint() for n, f in inc.state.frames().items()
-    }
-    inc.release()  # checkpoint barrier passed: drop this run's caches
-    counts: dict[str, int] = {}
-    for name, frame in frames.items():
-        # the merged frame = stored table ∪ inserts; re-merging it keyed on
-        # the table's keys writes exactly the insert-only MERGE result
-        merge_into_table(
-            spark,
-            f"{namespace}.{name}",
-            frame,
-            STATE_KEYS[name],
-            insert_only=True,
-        )
-        counts[name] = spark.read.table(f"{namespace}.{name}").count()
-    return counts
 
 
-def init_state_tables_v2(
+def init_state_tables(
     spark: SparkSession,
     base_docs: DataFrame,
-    emb: DataFrame,
-    cents: DataFrame,
-    namespace: str = "corpus_inc2",
+    emb: DataFrame | None = None,
+    cents: DataFrame | None = None,
+    namespace: str = "corpus_inc",
 ) -> None:
-    """Materialize the v2 (semantic) base state as SEVEN managed stage
-    tables under ``namespace`` — the production backfill for a
-    SemDeDup-in-the-funnel deployment."""
-    import re
-
-    if not re.fullmatch(r"[A-Za-z_][A-Za-z0-9_]*", namespace):
-        raise ValueError(f"invalid namespace {namespace!r}")
-    spark.sql(f"CREATE DATABASE IF NOT EXISTS {namespace}")
-    built = build_state_v2_detailed(base_docs, emb, cents)
+    """Materialize the base state as managed stage tables under
+    ``namespace`` (the production backfill) — seven tables when *emb*
+    and *cents* are given, five otherwise."""
+    ensure_namespace(spark, namespace)
+    built = build_state_detailed(base_docs, emb, cents)
     for name, frame in built.state.frames().items():
         frame.write.mode("overwrite").saveAsTable(f"{namespace}.{name}")
     built.release()  # tables written: drop the backfill's internal caches
 
 
-def run_increment_v2(
+def run_increment(
     spark: SparkSession,
     batch_docs: DataFrame,
-    emb: DataFrame,
-    cents: DataFrame,
-    namespace: str = "corpus_inc2",
+    emb: DataFrame | None = None,
+    cents: DataFrame | None = None,
+    namespace: str = "corpus_inc",
 ) -> dict[str, int]:
-    """MERGE one batch through the LEXICAL AND SEMANTIC funnel into the
-    seven persisted stage tables and return the per-table row counts —
-    ``run_increment``'s v2 sibling, completing the managed-table flavor
-    of the semantic state (batch / incremental / stream / warehouse, the
-    same four shapes the lexical state ships).
+    """MERGE one batch into the persisted stage tables and return the
+    per-table row counts after the merge (the increment's funnel). A
+    namespace holding the semantic tables needs the batch's *emb* and
+    the codebook *cents*.
 
-    Same envelope as v1 (see ``run_increment``'s docstring for the
-    lineage-severing and cache-invalidation contract, which applies
-    verbatim): the merged frames are localCheckpoint'ed BEFORE any table
-    swap, the increment's internal persists (batch LSH doc aggregate +
-    batch cell index) release after that barrier, and with Delta on the
-    classpath ``merge_into_table`` runs the native transactional MERGE.
-    Idempotent: a replayed batch's fingerprints are all in the ledger,
-    so no table — including cells/sem_edges — gains rows."""
-    state = CorpusStateV2(
-        lex=CorpusState(
-            **{n: spark.read.table(f"{namespace}.{n}") for n in STATE_KEYS}
-        ),
-        cells=spark.read.table(f"{namespace}.cells"),
-        sem_edges=spark.read.table(f"{namespace}.sem_edges"),
+    Uses ``merge_into_table`` per stage table — the reference's
+    ingest_stocks.py:84-100 MERGE shape (Delta-native when delta-spark is
+    on the classpath, staged-swap parquet otherwise) — offering it only
+    the increment's INSERTS, so the keyed insert-only anti-join runs
+    once per table. Idempotent: a replayed batch offers no rows.
+
+    Cache invalidation is SCOPED to this run's own persists: the only
+    CacheManager entries an increment creates are its internal persists
+    (the batch LSH doc aggregate, the ledger-anti-joined batch, its
+    exact-kept survivors and — semantic — the batch cell index), and
+    entries of that class were a stale-plan bug — a later run's
+    structurally-identical plan matched the previous run's cached entry,
+    which held pre-swap file listings of the stage tables. Releasing
+    them after the localCheckpoint barrier (lineage severed) leaves
+    nothing for the next increment to collide with, and unrelated caches
+    the caller holds survive. Table-direct caches are handled by
+    ``merge_into_table``'s post-swap ``refreshTable``.
+
+    What the Delta path would strengthen (delta-spark is not installable
+    here — session.delta_available): (1) the staged-swap's crash window
+    (two renames) becomes one atomic commit, so a concurrent reader can
+    never observe the table under its ``__old``/``__staging`` name; (2)
+    the eager source-read inside MERGE makes the pre-swap
+    localCheckpoint a no-op safeguard instead of a correctness
+    requirement; (3) time travel would let the replay test assert
+    version N == version N+1 instead of row-set equality. The SEMANTICS
+    proven here (insert-only keyed MERGE, idempotent replay, increment
+    == rebuild) are identical on both paths."""
+    ensure_namespace(spark, namespace)
+    inc = apply_increment_detailed(
+        load_state_tables(spark, namespace), batch_docs, emb, cents
     )
-    inc = apply_increment_v2_detailed(state, batch_docs, emb, cents)
-    from personal_data_lakehouse_spark.operators.merge import merge_into_table
-
-    frames = {
-        n: f.localCheckpoint() for n, f in inc.state.frames().items()
-    }
+    # Sever lineage BEFORE any table swap: the inserts read the stage
+    # tables lazily BY NAME, so swapping table 1 would silently change
+    # what inserts 2..n compute (e.g. the edge probe re-reading an
+    # already-updated band index). Batch-sized checkpoints.
+    inserts = {n: f.localCheckpoint() for n, f in inc.inserts.items()}
     inc.release()  # checkpoint barrier passed: drop this run's caches
     counts: dict[str, int] = {}
-    for name, frame in frames.items():
+    for name, frame in inserts.items():
         merge_into_table(
             spark,
             f"{namespace}.{name}",
             frame,
-            STATE_KEYS_V2[name],
+            STATE_KEYS[name],
             insert_only=True,
         )
         counts[name] = spark.read.table(f"{namespace}.{name}").count()

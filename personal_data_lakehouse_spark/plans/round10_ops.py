@@ -5,19 +5,20 @@ The v1 capstone's persisted ``CorpusState`` was lexical only (fingerprint
 ledger + LSH index): a daily-delta deployment wanting SemDeDup in the
 funnel had to re-embed-and-re-pair the whole corpus even though the
 ONLINE form of semantic index maintenance already existed
-(``round9_ops.online_semdedup_admit``). The v2 state
-(``corpus_incremental.CorpusStateV2``) persists exactly the artifacts
-the online loop maintains per-batch — the vector cell index and the
-verified semantic edge table — and ``apply_increment_v2`` runs
-embed-probe-verify for the BATCH only, with the derived closure merging
-lexical ∪ semantic edges.
+(``round9_ops.online_semdedup_admit``). The semantic (v2) state — a
+``corpus_incremental.CorpusState`` carrying ``cells``/``sem_edges`` —
+persists exactly the artifacts the online loop maintains per-batch —
+the vector cell index and the verified semantic edge table — and
+``apply_increment`` runs embed-probe-verify for the BATCH only, with the
+derived closure merging lexical ∪ semantic edges.
 
 Proof technique is r9's verbatim: ONE composed full-recompute oracle
 (the r8 e2e oracle extended with the semantic edge CTEs via
 ``round8_ops.corpus_pipeline_oracle`` — inject-time composition, zero
 drift) shared by BOTH the full-recompute query and the incremental
 query, plus idempotent-replay / cross-family-bridge / increment-equals-
-rebuild pytests (tests/test_corpus_incremental_v2.py).
+rebuild pytests (the semantic cases of tests/test_corpus_incremental.py
+and tests/test_corpus_incremental_v2.py).
 
 Reference parity: the incremental-semantic generalization of
 transforme_stock_silver.py:41-97 (watermark increment) +
@@ -26,6 +27,8 @@ dedup key set now a VECTOR index.
 """
 
 from __future__ import annotations
+
+from dataclasses import replace
 
 from pyspark.sql import functions as F
 
@@ -60,9 +63,8 @@ def t_corpus_pipeline_sem_e2e(spark, sf_dir):
     funnel rather than run beside it (``t_semdedup_clusters`` is the
     standalone decision): the closure unions ``corpus.dedup_near_stage``
     edges with ``corpus_incremental._sem_pairs`` edges and everything
-    downstream is the shared v1 rollup (``state_rollup`` verbatim via
-    ``state_rollup_v2`` — the two pipelines cannot drift in the derived
-    stages).
+    downstream is the shared rollup (``state_rollup`` — the lexical and
+    semantic pipelines cannot drift in the derived stages).
 
     Scale: inherits the audited v1 shape; the semantic addition is one
     broadcast-codebook cell assignment over survivors (map-side), Σ|cell|²
@@ -77,8 +79,8 @@ def t_corpus_pipeline_sem_e2e(spark, sf_dir):
     dedup/similarity extension families.
     """
     from personal_data_lakehouse_spark.corpus_incremental import (
-        build_state_v2,
-        state_rollup_v2,
+        build_state,
+        state_rollup,
     )
     from personal_data_lakehouse_spark.plans.similarity_ops import (
         _CENTROID_IDS,
@@ -88,7 +90,7 @@ def t_corpus_pipeline_sem_e2e(spark, sf_dir):
     docs = t(spark, sf_dir, "documents")
     emb = t(spark, sf_dir, "embeddings")
     cents = pick_centroids(emb, _CENTROID_IDS)
-    return state_rollup_v2(build_state_v2(docs, emb, cents))
+    return state_rollup(build_state(docs, emb, cents))
 
 
 # ---------------------------------------------------------------------------
@@ -113,7 +115,6 @@ def _materialized_base_state_v2(
     registry queries' canonical 80/20 artifacts must never be served to
     a caller that asked for another split."""
     from personal_data_lakehouse_spark.corpus_incremental import (
-        CorpusStateV2,
         _doc_cells,
         _sem_pairs,
     )
@@ -139,11 +140,7 @@ def _materialized_base_state_v2(
             missing.append(n)
     if missing:
         npart = spark.sparkContext.defaultParallelism
-        cells = (
-            _doc_cells(lex.skeleton.select("doc_id"), emb, cents)
-            .coalesce(npart)
-            .persist()
-        )
+        cells = _doc_cells(lex.skeleton, emb, cents)
         if "cells" in missing:
             cells.write.mode("overwrite").parquet(dirs["cells"])
         if "sem_edges" in missing:
@@ -151,8 +148,8 @@ def _materialized_base_state_v2(
                 "overwrite"
             ).parquet(dirs["sem_edges"])
         cells.unpersist()
-    return CorpusStateV2(
-        lex=lex,
+    return replace(
+        lex,
         cells=read_parquet_cached(spark, dirs["cells"]),
         sem_edges=read_parquet_cached(spark, dirs["sem_edges"]),
     )
@@ -194,8 +191,8 @@ def t_corpus_pipeline_incremental_v2(spark, sf_dir):
     (round9_ops.online_semdedup_admit) maintains per-batch.
     """
     from personal_data_lakehouse_spark.corpus_incremental import (
-        apply_increment_v2,
-        state_rollup_v2,
+        apply_increment,
+        state_rollup,
     )
     from personal_data_lakehouse_spark.plans.similarity_ops import (
         _CENTROID_IDS,
@@ -215,7 +212,7 @@ def t_corpus_pipeline_incremental_v2(spark, sf_dir):
     # O(batch) vector claim is plan-pinned alongside the text claim
     # (tests/test_corpus_incremental_v2.py)
     emb_batch = emb.filter(F.col("vec_id") >= thr)
-    return state_rollup_v2(apply_increment_v2(state, batch, emb_batch, cents))
+    return state_rollup(apply_increment(state, batch, emb_batch, cents))
 
 
 def _inject_sem_pipeline_oracle() -> None:
@@ -279,7 +276,7 @@ def t_stream_corpus_increments_v2(spark, sf_dir):
     fixture: mtime order = id order under ``maxFilesPerTrigger=1``)
     against the seven-table base state, with every micro-batch MERGEd
     through the full lexical funnel AND the semantic stage
-    (``corpus_incremental.apply_increment_v2`` inside ``foreachBatch``:
+    (``corpus_incremental.apply_increment`` inside ``foreachBatch``:
     batch-only shingling + stored-band probe, batch-only cell assignment
     + STORED cell-index probe, insert-only MERGE into all seven tables).
     The carried state is localCheckpoint'ed per batch (seven eager
@@ -297,7 +294,7 @@ def t_stream_corpus_increments_v2(spark, sf_dir):
     lifetime); the carried state is the sparse seven-table skeleton,
     checkpoint-bounded per batch; at warehouse scale the state lives as
     managed tables and the body becomes
-    ``corpus_incremental.run_increment_v2`` (the MERGE-per-batch shape,
+    ``corpus_incremental.run_increment`` (the MERGE-per-batch shape,
     replay-idempotent). The batch's vectors arrive WITH the batch in
     production; here the shared embeddings fixture stands in,
     pre-filtered at plan time to the delta id range (parquet-pruned) —
@@ -309,21 +306,10 @@ def t_stream_corpus_increments_v2(spark, sf_dir):
     loop, the dedup key set generalized to a vector index; SURVEY §2
     S6+/P3/J1 × the §2.9 streaming extension × the similarity family.
     """
-    from personal_data_lakehouse_spark.corpus_incremental import (
-        STATE_KEYS,
-        CorpusState,
-        CorpusStateV2,
-        apply_increment_v2_detailed,
-        state_rollup_v2,
-    )
     from personal_data_lakehouse_spark.plans.similarity_ops import (
         _CENTROID_IDS,
     )
     from personal_data_lakehouse_spark.similarity.ivf import pick_centroids
-    from personal_data_lakehouse_spark.streaming.windows import (
-        drain_stream_foreach,
-        stream_work_dir,
-    )
 
     docs = t(spark, sf_dir, "documents")
     emb = t(spark, sf_dir, "embeddings")
@@ -332,65 +318,12 @@ def t_stream_corpus_increments_v2(spark, sf_dir):
     batch_docs = docs.filter(F.col("doc_id") >= thr)
     cents = pick_centroids(emb, _CENTROID_IDS)
     emb_delta = emb.filter(F.col("vec_id") >= thr)
-
     # the SAME materialized seven-table base state the v2 incremental
-    # query reads, and the SAME delta files the v1 stream replays
+    # query reads, and the SAME delta files and loop the v1 stream runs
     state0 = _materialized_base_state_v2(spark, sf_dir, base)
-    src, doc_schema = round9_ops.delta_stream_source(
-        spark, sf_dir, batch_docs
+    return round9_ops.stream_corpus_increments(
+        spark, sf_dir, state0, batch_docs, "corpincstream2", emb_delta, cents
     )
-    work = stream_work_dir("corpincstream2")
-    carried = {"state": state0}
-    # r13: cap carried-state partition growth per batch (see the v1
-    # stream capstone's comment — same defect, seven tables here)
-    from personal_data_lakehouse_spark.operators.partitioning import (
-        probed_num_partitions,
-    )
-
-    _caps = {
-        n: max(
-            spark.sparkContext.defaultParallelism,
-            probed_num_partitions(f),
-        )
-        for n, f in state0.frames().items()
-    }
-
-    def process_batch(batch, _bid):
-        from concurrent.futures import ThreadPoolExecutor
-
-        inc = apply_increment_v2_detailed(
-            carried["state"], batch, emb_delta, cents
-        )
-        frames = inc.state.frames()
-        with ThreadPoolExecutor(len(frames)) as ex:
-            cps = dict(
-                zip(
-                    frames,
-                    ex.map(
-                        lambda kv: kv[1]
-                        .coalesce(_caps[kv[0]])
-                        .localCheckpoint(),
-                        frames.items(),
-                    ),
-                )
-            )
-        # barrier passed → lineage severed: release the batch LSH doc
-        # aggregate AND the batch cell index (bounded storage on an
-        # unbounded stream, the v1 contract)
-        inc.release()
-        carried["state"] = CorpusStateV2(
-            lex=CorpusState(**{k: cps[k] for k in STATE_KEYS}),
-            cells=cps["cells"],
-            sem_edges=cps["sem_edges"],
-        )
-
-    stream = (
-        spark.readStream.schema(doc_schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-    drain_stream_foreach(stream, work, process_batch)
-    return state_rollup_v2(carried["state"])
 
 
 def _inject_stream_sem_oracle() -> None:

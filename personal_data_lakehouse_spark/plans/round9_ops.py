@@ -872,6 +872,30 @@ def t_stream_corpus_increments(spark, sf_dir):
     intake + MERGE) composed with the silver/gold increments as ONE
     streaming loop; SURVEY §2 S6+/P3/J1 × the §2.9 streaming extension.
     """
+    docs = t(spark, sf_dir, "documents")
+    thr = _inc_threshold(spark, sf_dir, docs)
+    base = docs.filter(F.col("doc_id") < thr)
+    batch_docs = docs.filter(F.col("doc_id") >= thr)
+    # the SAME materialized base state the incremental query reads —
+    # shared artifacts, zero extra manufacture
+    state0 = _materialized_base_state(spark, sf_dir, base)
+    return stream_corpus_increments(
+        spark, sf_dir, state0, batch_docs, "corpincstream"
+    )
+
+
+def stream_corpus_increments(
+    spark, sf_dir, state0, batch_docs, work_name, emb=None, cents=None
+):
+    """Replay *batch_docs* as the three-file delta stream
+    (``delta_stream_source``) against *state0*, MERGEing every
+    micro-batch through ``corpus_incremental.apply_increment`` inside
+    ``foreachBatch``, and return the final state's rollup. The loop body
+    of both stream capstones: with a semantic *state0* (it carries
+    ``cells``) each batch also runs the semantic stage against the
+    batch's embeddings *emb* and the codebook *cents*."""
+    from concurrent.futures import ThreadPoolExecutor
+
     from personal_data_lakehouse_spark.corpus_incremental import (
         CorpusState,
         apply_increment_detailed,
@@ -885,17 +909,8 @@ def t_stream_corpus_increments(spark, sf_dir):
         stream_work_dir,
     )
 
-    docs = t(spark, sf_dir, "documents")
-    thr = _inc_threshold(spark, sf_dir, docs)
-    base = docs.filter(F.col("doc_id") < thr)
-    batch_docs = docs.filter(F.col("doc_id") >= thr)
-
-    # the SAME materialized base state the incremental query reads —
-    # shared artifacts, zero extra manufacture
-    state0 = _materialized_base_state(spark, sf_dir, base)
-
     src, doc_schema = delta_stream_source(spark, sf_dir, batch_docs)
-    work = stream_work_dir("corpincstream")
+    work = stream_work_dir(work_name)
     carried = {"state": state0}
     # r13 (guide §2.2 fewer/larger partitions): each per-batch checkpoint
     # UNIONs the carried state with the batch inserts, so the carried
@@ -906,7 +921,7 @@ def t_stream_corpus_increments(spark, sf_dir):
     # partition count at state-load) — coalesce never splits, so a
     # 100 TB state that legitimately arrives with partitions ≫ cores
     # keeps them; only the per-batch sliver growth is folded back.
-    _caps = {
+    caps = {
         n: max(
             spark.sparkContext.defaultParallelism,
             probed_num_partitions(f),
@@ -915,35 +930,31 @@ def t_stream_corpus_increments(spark, sf_dir):
     }
 
     def process_batch(batch, _bid):
-        from concurrent.futures import ThreadPoolExecutor
-
-        inc = apply_increment_detailed(carried["state"], batch)
-        merged = inc.state
+        inc = apply_increment_detailed(carried["state"], batch, emb, cents)
         # Sever lineage per batch — an unbounded stream would otherwise
         # grow every state frame's plan by one increment per batch — with
-        # the five EAGER checkpoints submitted CONCURRENTLY: serially
-        # they cost five job barriers (~3 s/batch measured at sf0.1);
-        # Spark's scheduler runs the five tiny jobs in parallel, so the
+        # the EAGER checkpoints submitted CONCURRENTLY: serially they cost
+        # one job barrier per table (~3 s/batch measured at sf0.1 for
+        # five); Spark's scheduler runs the tiny jobs in parallel, so the
         # wall cost is ~one barrier. (localCheckpoint(eager=False) was
         # measured and rejected: it skips the barriers but leaves the
         # LOGICAL plans untruncated until materialization, so per-batch
         # Catalyst analysis grows with stream length — the exact failure
         # the checkpoint exists to prevent.)
-        frames = merged.frames()
+        frames = inc.state.frames()
         with ThreadPoolExecutor(len(frames)) as ex:
             cps = dict(
                 zip(
                     frames,
                     ex.map(
-                        lambda kv: kv[1].coalesce(_caps[kv[0]]).localCheckpoint(),
+                        lambda kv: kv[1].coalesce(caps[kv[0]]).localCheckpoint(),
                         frames.items(),
                     ),
                 )
             )
         # checkpoint barrier passed → lineage severed: release this
-        # batch's internal cache (the LSH doc aggregate) so executor
-        # storage stays bounded on an unbounded stream (r9 ADVICE —
-        # previously one cached frame accreted per micro-batch)
+        # batch's internal caches so executor storage stays bounded on
+        # an unbounded stream
         inc.release()
         carried["state"] = CorpusState(**cps)
 

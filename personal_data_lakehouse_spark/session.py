@@ -36,6 +36,14 @@ def delta_available() -> bool:
         return False
 
 
+def _default_driver_memory() -> str:
+    """Half of physical memory, in whole GiB (at least 1): in local mode
+    the driver JVM hosts every executor, and a heap ceiling above what the
+    machine has lets the heap grow until the kernel kills the JVM."""
+    total = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{max(1, total // 2 // 2**30)}g"
+
+
 def get_spark(
     app_name: str = "personal_data_lakehouse_spark",
     master: str | None = None,
@@ -68,7 +76,10 @@ def get_spark(
         # rows, ~10× less serialization overhead on wide corpus scans; the
         # registry-wide lint (tests/test_plan_lint.py) forbids the row path.
         .config("spark.sql.execution.pythonUDTF.arrow.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "24g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEM") or _default_driver_memory(),
+        )
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
     )

@@ -1,10 +1,15 @@
 """Incremental corpus-pipeline runs (corpus_incremental.py): the merged
 end state must equal a full recompute over the union, a replayed batch
 must change NOTHING (idempotent MERGE), and the managed-table flavor
-must survive both properties through real table swaps."""
+must survive both properties through real table swaps while offering
+each table only its inserts. The shared-shape tests run twice: over the
+lexical state and over the semantic state (embeddings + IVF codebook,
+seven tables); tests only the semantic stage has live in
+tests/test_corpus_incremental_v2.py."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from personal_data_lakehouse_spark.corpus import (
@@ -21,11 +26,18 @@ from personal_data_lakehouse_spark.corpus_incremental import (
     apply_increment,
     build_state,
     init_state_tables,
+    load_state_tables,
     run_increment,
     state_rollup,
 )
 from personal_data_lakehouse_spark.plans.registry import t
+from personal_data_lakehouse_spark.plans.similarity_ops import _CENTROID_IDS
+from personal_data_lakehouse_spark.similarity.ivf import pick_centroids
 from tests.conftest import SF_DIR
+
+LEXICAL_KEYS = {"fp", "shingles", "bands", "edges", "skeleton"}
+
+modes = pytest.mark.parametrize("mode", ["lexical", "semantic"])
 
 
 def _full_recompute_rollup(docs):
@@ -33,6 +45,34 @@ def _full_recompute_rollup(docs):
         rebalance_stage(dedup_near_stage(dedup_exact_stage(intake(docs))))
     )
     return pipeline_rollup(packed_docs(staged))
+
+
+def _rebuild_rollup(docs, emb=None, cents=None):
+    """The full-recompute end state: the corpus.py stage chain for the
+    lexical state, a semantic ``build_state`` over all docs otherwise."""
+    if emb is None:
+        return _full_recompute_rollup(docs)
+    return state_rollup(build_state(docs, emb, cents))
+
+
+def _vectors(spark, mode):
+    """(embeddings, codebook) for the semantic mode, (None, None) else."""
+    if mode == "lexical":
+        return None, None
+    emb = t(spark, SF_DIR, "embeddings")
+    return emb, pick_centroids(emb, _CENTROID_IDS)
+
+
+def _batch_vectors(emb, lo, hi=None):
+    """The batch's embeddings: vec_id in [lo, hi), pre-filtered as the
+    registered queries pass them (values identical either way — the
+    cell builder inner-joins survivor ids)."""
+    if emb is None:
+        return None
+    cond = F.col("vec_id") >= lo
+    if hi is not None:
+        cond = cond & (F.col("vec_id") < hi)
+    return emb.filter(cond)
 
 
 def _rows(df):
@@ -48,20 +88,33 @@ def _split(spark, thr: int):
     )
 
 
-def test_increment_equals_full_recompute(spark):
+@modes
+def test_increment_equals_full_recompute(spark, mode):
     base, batch, docs = _split(spark, 400)
-    merged = apply_increment(build_state(base), batch)
-    assert _rows(state_rollup(merged)) == _rows(_full_recompute_rollup(docs))
+    emb, cents = _vectors(spark, mode)
+    merged = apply_increment(
+        build_state(base, emb, cents), batch, _batch_vectors(emb, 400), cents
+    )
+    assert _rows(state_rollup(merged)) == _rows(
+        _rebuild_rollup(docs, emb, cents)
+    )
 
 
-def test_increment_replay_is_noop(spark):
+@modes
+def test_increment_replay_is_noop(spark, mode):
     """Re-applying the SAME batch to the already-merged state inserts
-    nothing in any of the five stage tables — the MERGE idempotency the
-    reference's dedup-on-append contract promises."""
+    nothing in any stage table — the MERGE idempotency the reference's
+    dedup-on-append contract promises. In the semantic state the
+    replayed batch's fingerprints are all in the ledger, so no survivor
+    reaches the semantic stage either."""
     base, batch, _ = _split(spark, 400)
-    once = apply_increment(build_state(base), batch)
+    emb, cents = _vectors(spark, mode)
+    emb_b = _batch_vectors(emb, 400)
+    once = apply_increment(build_state(base, emb, cents), batch, emb_b, cents)
     frames_once = {n: _rows(f) for n, f in once.frames().items()}
-    twice = apply_increment(once, batch)
+    expected = LEXICAL_KEYS if mode == "lexical" else set(STATE_KEYS)
+    assert set(frames_once) == expected
+    twice = apply_increment(once, batch, emb_b, cents)
     for name, frame in twice.frames().items():
         assert _rows(frame) == frames_once[name], name
 
@@ -137,41 +190,75 @@ def test_increment_can_bridge_existing_clusters(spark):
     assert _rows(state_rollup(merged)) == _rows(full)
 
 
-def test_managed_table_increment_and_replay(spark):
+@modes
+def test_managed_table_increment_and_replay(spark, mode, monkeypatch):
     """The warehouse flavor: init base tables, MERGE one increment, check
     the rollup equals the full recompute; replay the batch and check every
-    stage table is row-identical (insert-only MERGE found nothing new)."""
-    from personal_data_lakehouse_spark.corpus_incremental import CorpusState
+    stage table is row-identical (insert-only MERGE found nothing new).
 
+    A spy on ``merge_into_table`` pins the merge-once contract: each
+    table is offered only the increment's inserts — exactly the rows the
+    table gains on a fresh batch, and no rows at all on a replay."""
+    from personal_data_lakehouse_spark import corpus_incremental
+
+    ns = f"corpinc_{mode}_t"
     base, batch, docs = _split(spark, 400)
-    init_state_tables(spark, base, namespace="corpinc_t")
-    counts1 = run_increment(spark, batch, namespace="corpinc_t")
+    emb, cents = _vectors(spark, mode)
+    emb_b = _batch_vectors(emb, 400)
+    init_state_tables(spark, base, emb, cents, namespace=ns)
+
+    offered: dict[str, int] = {}
+    real_merge = corpus_incremental.merge_into_table
+
+    def spy(spark_, table, source, keys, insert_only=False):
+        assert insert_only
+        offered[table.rpartition(".")[2]] = source.count()
+        real_merge(spark_, table, source, keys, insert_only)
+
+    monkeypatch.setattr(corpus_incremental, "merge_into_table", spy)
 
     def tables():
-        return CorpusState(
-            **{n: spark.read.table(f"corpinc_t.{n}") for n in STATE_KEYS}
-        )
+        return load_state_tables(spark, ns)
 
-    assert _rows(state_rollup(tables())) == _rows(_full_recompute_rollup(docs))
+    sizes0 = {n: f.count() for n, f in tables().frames().items()}
+    counts1 = run_increment(spark, batch, emb_b, cents, namespace=ns)
+    assert set(offered) == set(sizes0)
+    assert offered == {n: counts1[n] - sizes0[n] for n in sizes0}
+    assert sum(offered.values()) > 0
+
+    assert _rows(state_rollup(tables())) == _rows(
+        _rebuild_rollup(docs, emb, cents)
+    )
 
     before = {n: _rows(f) for n, f in tables().frames().items()}
-    counts2 = run_increment(spark, batch, namespace="corpinc_t")
+    offered.clear()
+    counts2 = run_increment(spark, batch, emb_b, cents, namespace=ns)
+    assert offered == {n: 0 for n in sizes0}
     assert counts2 == counts1
     after = {n: _rows(f) for n, f in tables().frames().items()}
     assert after == before
 
 
-def test_increment_matches_rebuild_on_random_corpora(spark):
+@modes
+def test_increment_matches_rebuild_on_random_corpora(spark, mode):
     """Property (seeded): on random small-vocab corpora — duplicate-dense
     so every stage's decision branch fires — splitting at a random point
     and incrementing must reproduce the full-recompute rollup, and a
     replay must change nothing. Catches split-boundary classes the
     fixture split never hits (empty batch, batch-only corpus, all-dup
-    batch)."""
+    batch). The semantic mode adds random clustered embeddings, so BOTH
+    edge families are active (template texts → lexical dups; template
+    directions + noise → semantic near/far mixes)."""
     import random
 
     rng = random.Random(20260815)
     vocab = [f"w{i}" for i in range(30)]
+    dirs = [
+        [1.0, 0.0, 0.0, 0.0],
+        [0.0, 1.0, 0.0, 0.0],
+        [0.0, 0.0, 1.0, 0.0],
+        [0.7, 0.7, 0.0, 0.0],
+    ]
 
     def rand_doc(i):
         # heavy duplication: half the docs are near-copies of a template
@@ -183,6 +270,10 @@ def test_increment_matches_rebuild_on_random_corpora(spark):
             txt += vocab[rng.randrange(len(vocab))] + " extra tail"
         return (i, txt, "en", rng.choice(["web", "books", "code"]))
 
+    def rand_vec(i):
+        d = dirs[rng.randrange(len(dirs))]
+        return (i, [x + rng.uniform(-0.2, 0.2) for x in d])
+
     # two trials keep the wall cost ~3 min; the rng seed is fixed, so
     # widening coverage later is a one-character change
     for trial in range(2):
@@ -193,16 +284,25 @@ def test_increment_matches_rebuild_on_random_corpora(spark):
         ).select(
             "doc_id", "text", "lang", F.length("text").alias("n_chars"), "source"
         )
+        emb = cents = None
+        if mode == "semantic":
+            emb = spark.createDataFrame(
+                [rand_vec(i) for i in range(n)]
+                + [(1000, [1.0, 1.0, 0.0, 0.0]), (1001, [0.0, 0.0, 1.0, 1.0])],
+                "vec_id bigint, embedding array<float>",
+            )
+            cents = pick_centroids(emb, [1000, 1001])
+        rebuild = _rows(_rebuild_rollup(docs, emb, cents))
         # split points include the degenerate ends: empty batch (n) and
         # everything-in-batch (0 — an empty BASE state)
         for cut in {0, rng.randrange(n + 1), n}:
             base = docs.filter(F.col("doc_id") < cut)
             batch = docs.filter(F.col("doc_id") >= cut)
-            merged = apply_increment(build_state(base), batch)
-            assert _rows(state_rollup(merged)) == _rows(
-                _full_recompute_rollup(docs)
-            ), (trial, cut)
-            again = apply_increment(merged, batch)
+            merged = apply_increment(
+                build_state(base, emb, cents), batch, emb, cents
+            )
+            assert _rows(state_rollup(merged)) == rebuild, (trial, cut)
+            again = apply_increment(merged, batch, emb, cents)
             for name, frame in again.frames().items():
                 assert _rows(frame) == _rows(merged.frames()[name]), (
                     trial,
@@ -235,15 +335,22 @@ def test_incremental_plan_reads_only_batch_text(spark):
         assert re.search(r"doc_id#\d+L? >= 400", line), line[:300]
 
 
-def test_chained_increments_match_rebuild(spark):
+@modes
+def test_chained_increments_match_rebuild(spark, mode):
     """Two SUCCESSIVE increments (the multi-day delta sequence) must land
-    on the full-recompute end state: the second batch probes a band
-    index that already contains the first batch's survivors, and its
-    candidates include batch2×batch1 pairs — the case a single-increment
-    test never exercises."""
+    on the full-recompute end state: the second batch probes a band (and
+    cell) index that already contains the first batch's survivors, and
+    its candidates include batch2×batch1 pairs — the case a
+    single-increment test never exercises."""
     docs = t(spark, SF_DIR, "documents")
+    emb, cents = _vectors(spark, mode)
     base = docs.filter(F.col("doc_id") < 300)
     b1 = docs.filter((F.col("doc_id") >= 300) & (F.col("doc_id") < 400))
     b2 = docs.filter(F.col("doc_id") >= 400)
-    merged = apply_increment(apply_increment(build_state(base), b1), b2)
-    assert _rows(state_rollup(merged)) == _rows(_full_recompute_rollup(docs))
+    s1 = apply_increment(
+        build_state(base, emb, cents), b1, _batch_vectors(emb, 300, 400), cents
+    )
+    merged = apply_increment(s1, b2, _batch_vectors(emb, 400), cents)
+    assert _rows(state_rollup(merged)) == _rows(
+        _rebuild_rollup(docs, emb, cents)
+    )

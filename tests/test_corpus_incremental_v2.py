@@ -1,21 +1,21 @@
-"""V2 (semantic-stage) incremental corpus pipeline
-(corpus_incremental.CorpusStateV2): the merged seven-table end state must
-equal a full v2 recompute over the union, a replayed batch must change
-nothing, the closure must merge clusters ACROSS the lexical and semantic
-edge families, and the batch-only work claims must hold in the executed
-plan — the r9 proof technique applied to r10's semantic extension."""
+"""Semantic-stage (v2) incremental corpus pipeline: the tests only the
+semantic stage has. A ``CorpusState`` carrying ``cells``/``sem_edges``
+must merge clusters ACROSS the lexical and semantic edge families, the
+batch-only text AND vector claims must hold in the executed plan, and
+the registered stream must land on the full recompute. The tests that
+share the lexical state's shape (increment == rebuild, replay, chained,
+random corpora, managed tables) run as the semantic cases of
+tests/test_corpus_incremental.py."""
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
 from personal_data_lakehouse_spark.corpus_incremental import (
-    STATE_KEYS_V2,
-    apply_increment_v2,
-    build_state_v2,
-    state_rollup_v2,
+    apply_increment,
+    build_state,
+    state_rollup,
 )
-from personal_data_lakehouse_spark.plans.registry import t
 from personal_data_lakehouse_spark.plans.similarity_ops import _CENTROID_IDS
 from personal_data_lakehouse_spark.similarity.ivf import pick_centroids
 from tests.conftest import SF_DIR
@@ -23,74 +23,6 @@ from tests.conftest import SF_DIR
 
 def _rows(df):
     return sorted(tuple(r) for r in df.collect())
-
-
-def _fixture(spark, thr: int):
-    docs = t(spark, SF_DIR, "documents")
-    emb = t(spark, SF_DIR, "embeddings")
-    cents = pick_centroids(emb, _CENTROID_IDS)
-    return (
-        docs.filter(F.col("doc_id") < thr),
-        docs.filter(F.col("doc_id") >= thr),
-        docs,
-        emb,
-        cents,
-    )
-
-
-def test_v2_increment_equals_full_recompute(spark):
-    base, batch, docs, emb, cents = _fixture(spark, 400)
-    merged = apply_increment_v2(
-        build_state_v2(base, emb, cents),
-        batch,
-        # the batch's vectors pre-filtered to the batch range, as the
-        # registered query passes them (values identical either way —
-        # the cell builder inner-joins survivor ids)
-        emb.filter(F.col("vec_id") >= 400),
-        cents,
-    )
-    rebuild = build_state_v2(docs, emb, cents)
-    assert _rows(state_rollup_v2(merged)) == _rows(state_rollup_v2(rebuild))
-
-
-def test_v2_increment_replay_is_noop(spark):
-    """Re-applying the SAME batch inserts nothing in any of the SEVEN
-    stage tables — the replayed batch's fingerprints are all in the
-    ledger, so no survivor reaches the semantic stage either."""
-    base, batch, _, emb, cents = _fixture(spark, 400)
-    emb_b = emb.filter(F.col("vec_id") >= 400)
-    once = apply_increment_v2(
-        build_state_v2(base, emb, cents), batch, emb_b, cents
-    )
-    frames_once = {n: _rows(f) for n, f in once.frames().items()}
-    assert set(frames_once) == set(STATE_KEYS_V2)
-    twice = apply_increment_v2(once, batch, emb_b, cents)
-    for name, frame in twice.frames().items():
-        assert _rows(frame) == frames_once[name], name
-
-
-def test_v2_chained_increments_match_rebuild(spark):
-    """Two successive v2 increments land on the rebuild end state: the
-    second batch probes a cell index that already contains the first
-    batch's survivors (batch2×batch1 semantic pairs — the case one
-    increment never exercises)."""
-    docs = t(spark, SF_DIR, "documents")
-    emb = t(spark, SF_DIR, "embeddings")
-    cents = pick_centroids(emb, _CENTROID_IDS)
-    base = docs.filter(F.col("doc_id") < 300)
-    b1 = docs.filter((F.col("doc_id") >= 300) & (F.col("doc_id") < 400))
-    b2 = docs.filter(F.col("doc_id") >= 400)
-    s1 = apply_increment_v2(
-        build_state_v2(base, emb, cents),
-        b1,
-        emb.filter((F.col("vec_id") >= 300) & (F.col("vec_id") < 400)),
-        cents,
-    )
-    s2 = apply_increment_v2(
-        s1, b2, emb.filter(F.col("vec_id") >= 400), cents
-    )
-    rebuild = build_state_v2(docs, emb, cents)
-    assert _rows(state_rollup_v2(s2)) == _rows(state_rollup_v2(rebuild))
 
 
 def _mk_docs(spark, rows):
@@ -139,18 +71,18 @@ def test_v2_closure_bridges_lexical_and_semantic_families(spark):
         ],
     )
     cents = pick_centroids(emb, [99])
-    state = build_state_v2(docs, emb, cents)
+    state = build_state(docs, emb, cents)
 
-    assert _rows(state.lex.edges) == [(1, 2)]
+    assert _rows(state.edges) == [(1, 2)]
     assert _rows(state.sem_edges) == [(2, 10)]
 
     from personal_data_lakehouse_spark.dedup.cluster import dedup_clusters
 
-    merged_edges = state.lex.edges.unionByName(state.sem_edges)
+    merged_edges = state.edges.unionByName(state.sem_edges)
     labels = {
         r["doc_id"]: (r["cluster_id"], r["is_canonical"])
         for r in dedup_clusters(
-            state.lex.skeleton.select("doc_id"), merged_edges
+            state.skeleton.select("doc_id"), merged_edges
         ).collect()
     }
     assert labels == {1: (1, True), 2: (1, False), 10: (1, False)}, labels
@@ -179,86 +111,23 @@ def test_v2_batch_can_bridge_semantic_clusters(spark):
 
     from personal_data_lakehouse_spark.dedup.cluster import dedup_clusters
 
-    state = build_state_v2(base, emb, cents)
+    state = build_state(base, emb, cents)
     assert _rows(state.sem_edges) == []  # two semantic singletons
 
-    merged = apply_increment_v2(state, batch, emb, cents)
+    merged = apply_increment(state, batch, emb, cents)
     assert _rows(merged.sem_edges) == [(1, 100), (10, 100)]
     labels = {
         r["doc_id"]: (r["cluster_id"], r["is_canonical"])
         for r in dedup_clusters(
-            merged.lex.skeleton.select("doc_id"),
-            merged.lex.edges.unionByName(merged.sem_edges),
+            merged.skeleton.select("doc_id"),
+            merged.edges.unionByName(merged.sem_edges),
         ).collect()
     }
     # the bridge fused everything into cluster 1; base doc 10 lost the flag
     assert labels == {1: (1, True), 10: (1, False), 100: (1, False)}, labels
     # and the merged end state equals the v2 rebuild over the union
-    rebuild = build_state_v2(base.unionByName(batch), emb, cents)
-    assert _rows(state_rollup_v2(merged)) == _rows(state_rollup_v2(rebuild))
-
-
-def test_v2_increment_matches_rebuild_on_random_corpora(spark):
-    """Property (seeded): random duplicate-dense corpora with random
-    clustered embeddings — split at random points (including the
-    degenerate ends) and check increment == rebuild plus replay-noop.
-    Covers split boundaries the fixture split never hits, with BOTH edge
-    families active (template texts → lexical dups; template directions
-    + noise → semantic near/far mixes)."""
-    import random
-
-    rng = random.Random(20260815)
-    vocab = [f"w{i}" for i in range(30)]
-    dirs = [
-        [1.0, 0.0, 0.0, 0.0],
-        [0.0, 1.0, 0.0, 0.0],
-        [0.0, 0.0, 1.0, 0.0],
-        [0.7, 0.7, 0.0, 0.0],
-    ]
-
-    def rand_doc(i):
-        tmpl = rng.randrange(6)
-        words = [vocab[(tmpl * 5 + k) % len(vocab)] for k in range(12)]
-        txt = (" ".join(words) + " ") * rng.randrange(8, 14)
-        if rng.random() < 0.5:
-            txt += vocab[rng.randrange(len(vocab))] + " extra tail"
-        return (i, txt, "en", rng.choice(["web", "books", "code"]))
-
-    def rand_vec(i):
-        d = dirs[rng.randrange(len(dirs))]
-        return (i, [x + rng.uniform(-0.2, 0.2) for x in d])
-
-    for trial in range(2):
-        n = rng.randrange(12, 30)
-        docs = spark.createDataFrame(
-            [rand_doc(i) for i in range(n)],
-            "doc_id bigint, text string, lang string, source string",
-        ).select(
-            "doc_id", "text", "lang", F.length("text").alias("n_chars"), "source"
-        )
-        emb = _mk_emb(
-            spark,
-            [rand_vec(i) for i in range(n)]
-            + [(1000, [1.0, 1.0, 0.0, 0.0]), (1001, [0.0, 0.0, 1.0, 1.0])],
-        )
-        cents = pick_centroids(emb, [1000, 1001])
-        rebuild = build_state_v2(docs, emb, cents)
-        for cut in {0, rng.randrange(n + 1), n}:
-            base = docs.filter(F.col("doc_id") < cut)
-            batch = docs.filter(F.col("doc_id") >= cut)
-            merged = apply_increment_v2(
-                build_state_v2(base, emb, cents), batch, emb, cents
-            )
-            assert _rows(state_rollup_v2(merged)) == _rows(
-                state_rollup_v2(rebuild)
-            ), (trial, cut)
-            again = apply_increment_v2(merged, batch, emb, cents)
-            for name, frame in again.frames().items():
-                assert _rows(frame) == _rows(merged.frames()[name]), (
-                    trial,
-                    cut,
-                    name,
-                )
+    rebuild = build_state(base.unionByName(batch), emb, cents)
+    assert _rows(state_rollup(merged)) == _rows(state_rollup(rebuild))
 
 
 def test_v2_incremental_plan_reads_only_batch_text_and_vectors(spark):
@@ -285,7 +154,7 @@ def test_v2_incremental_plan_reads_only_batch_text_and_vectors(spark):
     base = docs.filter(F.col("doc_id") < 400)
     batch = docs.filter(F.col("doc_id") >= 400)
     state = round10_ops._materialized_base_state_v2(spark, SF_DIR, base)
-    merged = apply_increment_v2(
+    merged = apply_increment(
         state, batch, emb.filter(F.col("vec_id") >= 400), cents
     )
     saw_doc_scan = saw_emb_scan = False
@@ -322,50 +191,3 @@ def test_v2_stream_increments_match_full_recompute(spark):
     streamed = REGISTRY["t_stream_corpus_increments_v2"].fn(spark, SF_DIR)
     rebuilt = REGISTRY["t_corpus_pipeline_sem_e2e"].fn(spark, SF_DIR)
     assert _rows(streamed) == _rows(rebuilt)
-
-
-def test_v2_managed_table_increment_and_replay(spark):
-    """The warehouse flavor of the SEMANTIC state: init the seven base
-    tables, MERGE one increment, check the rollup equals the full v2
-    recompute; replay the batch and check every stage table — including
-    cells and sem_edges — is row-identical (insert-only MERGE found
-    nothing new)."""
-    from personal_data_lakehouse_spark.corpus_incremental import (
-        STATE_KEYS,
-        CorpusState,
-        CorpusStateV2,
-        init_state_tables_v2,
-        run_increment_v2,
-    )
-
-    base, batch, docs, emb, cents = _fixture(spark, 400)
-    emb_batch = emb.filter(F.col("vec_id") >= 400)
-    init_state_tables_v2(spark, base, emb, cents, namespace="corpinc2_t")
-    counts1 = run_increment_v2(
-        spark, batch, emb_batch, cents, namespace="corpinc2_t"
-    )
-
-    def tables():
-        return CorpusStateV2(
-            lex=CorpusState(
-                **{
-                    n: spark.read.table(f"corpinc2_t.{n}")
-                    for n in STATE_KEYS
-                }
-            ),
-            cells=spark.read.table("corpinc2_t.cells"),
-            sem_edges=spark.read.table("corpinc2_t.sem_edges"),
-        )
-
-    rebuild = build_state_v2(docs, emb, cents)
-    assert _rows(state_rollup_v2(tables())) == _rows(
-        state_rollup_v2(rebuild)
-    )
-
-    before = {n: _rows(f) for n, f in tables().frames().items()}
-    counts2 = run_increment_v2(
-        spark, batch, emb_batch, cents, namespace="corpinc2_t"
-    )
-    assert counts2 == counts1
-    after = {n: _rows(f) for n, f in tables().frames().items()}
-    assert after == before

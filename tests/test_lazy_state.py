@@ -1,7 +1,8 @@
-"""r13: lazily-constructed merged-state frames must (a) build identical
+"""Lazily-constructed merged-state frames must (a) build identical
 frames to the eager merges, (b) defer construction of tables a consumer
-never reads, and (c) keep the stream/MERGE paths (frames(), replace)
-working unchanged. Plus the new rollup release handles (r12 ADVICE)."""
+never reads — semantic tables included — and (c) keep the stream/MERGE
+paths (frames(), replace) working unchanged. Plus the rollup release
+handles."""
 
 from __future__ import annotations
 
@@ -40,8 +41,13 @@ def _rows(df):
     return sorted(map(tuple, df.collect()))
 
 
-def test_lazy_fields_defer_and_memoize(spark):
-    calls = {"fp": 0, "skeleton": 0}
+LEXICAL = {"fp", "shingles", "bands", "edges", "skeleton"}
+
+
+@pytest.mark.parametrize("semantic", [False, True], ids=["lexical", "semantic"])
+def test_lazy_fields_defer_and_memoize(spark, semantic):
+    lazy = ["fp", "skeleton"] + (["cells", "sem_edges"] if semantic else [])
+    calls = dict.fromkeys(lazy, 0)
     base = spark.range(1).selectExpr("id AS doc_id")
 
     def mk(name):
@@ -51,16 +57,17 @@ def test_lazy_fields_defer_and_memoize(spark):
 
         return thunk
 
-    st = _LazyCorpusState(
-        fp=mk("fp"), shingles=base, bands=base, edges=base, skeleton=mk("skeleton")
-    )
-    assert calls == {"fp": 0, "skeleton": 0}  # nothing built yet
+    fields = {n: base for n in LEXICAL} | {n: mk(n) for n in lazy}
+    st = _LazyCorpusState(**fields)
+    assert set(calls.values()) == {0}  # nothing built yet
     _ = st.skeleton
-    assert calls == {"fp": 0, "skeleton": 1}  # only the accessed field
+    assert calls["skeleton"] == 1 and calls["fp"] == 0  # only that field
     _ = st.skeleton
     assert calls["skeleton"] == 1  # memoized
-    assert set(st.frames()) == {"fp", "shingles", "bands", "edges", "skeleton"}
-    assert calls == {"fp": 1, "skeleton": 1}  # frames() forces the rest
+    assert (st.cells is None) is not semantic
+    want = LEXICAL | ({"cells", "sem_edges"} if semantic else set())
+    assert set(st.frames()) == want  # absent semantic tables are omitted
+    assert set(calls.values()) == {1}  # frames() forces the rest, once
 
 
 def test_lazy_state_replace_forces_to_plain_frames(spark):

@@ -64,8 +64,10 @@ def profile_merge_analysis(spark, sf_dir, out):
     (no action run): how much do the unused merges cost per invocation?"""
     from personal_data_lakehouse_spark.corpus_incremental import (
         STATE_KEYS,
-        _skeleton,
         apply_increment_detailed,
+    )
+    from personal_data_lakehouse_spark.operators.merge import (
+        merge_insert_only,
     )
     from personal_data_lakehouse_spark.plans import round9_ops
     from personal_data_lakehouse_spark.plans.registry import t as t_
@@ -75,41 +77,16 @@ def profile_merge_analysis(spark, sf_dir, out):
     base = docs.filter(F.col("doc_id") < thr)
     batch = docs.filter(F.col("doc_id") >= thr)
     state = round9_ops._materialized_base_state(spark, sf_dir, base)
-    # time the full detailed call, then per-frame attribute cost is probed
-    # by re-running construction with a stopwatch around each merge via
-    # the module's own internals (approximated: construct the same merges
-    # directly).
-    from personal_data_lakehouse_spark.corpus_incremental import (
-        NEAR_THRESHOLD,
-    )
-    from personal_data_lakehouse_spark.operators.merge import (
-        merge_insert_only,
-    )
-
     inc = apply_increment_detailed(state, batch)
-    # the lazily-carried pieces: rebuild each merge standalone and time it
-    from personal_data_lakehouse_spark.functions.text import fingerprint
-    from personal_data_lakehouse_spark.corpus import intake
-
-    b_in = intake(batch)
-    b_fpd = b_in.withColumn("fp", fingerprint("text"))
-    b_new = b_fpd.join(state.fp.select("fp"), "fp", "left_anti")
-    b_keep = b_new.groupBy("fp").agg(F.min("doc_id").alias("keep_id"))
-    b_kept = b_new.join(
-        b_keep.select(F.col("keep_id").alias("doc_id")), "doc_id"
-    ).drop("fp")
-    timed(
-        "merge.fp",
-        lambda: merge_insert_only(state.fp, b_keep, STATE_KEYS["fp"]),
-        out,
-    )
-    timed(
-        "merge.skeleton",
-        lambda: merge_insert_only(
-            state.skeleton, _skeleton(b_kept), STATE_KEYS["skeleton"]
-        ),
-        out,
-    )
+    # each merge built standalone from the increment's own inserts
+    for name in ("fp", "skeleton"):
+        timed(
+            f"merge.{name}",
+            lambda: merge_insert_only(
+                getattr(state, name), inc.inserts[name], STATE_KEYS[name]
+            ),
+            out,
+        )
     inc.release()
     spark.catalog.clearCache()
 
