@@ -62,7 +62,8 @@ One increment produces one set of per-table INSERTS
 ``merge_insert_only(stored, insert)`` per table, built lazily; the
 managed-table flavor (``run_increment``) checkpoints and MERGEs only the
 inserts, so each table's insert-only anti-join runs once, inside
-``merge_into_table``.
+``merge_into_table``, which appends the new rows: a stored table's
+existing files are never rewritten.
 
 Work per increment: O(batch text) for gates/fingerprints/shingles,
 O(batch vectors) for cell assignment, O(new candidate pairs) for
@@ -79,8 +80,12 @@ composed with the LLM-pipeline extension family.
 
 from __future__ import annotations
 
+from collections.abc import Callable
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass
+from typing import TypeVar
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -195,6 +200,28 @@ class IncrementResult:
         — their lineage reads through these caches."""
         for frame in self.persisted:
             frame.unpersist()
+
+
+T = TypeVar("T")
+
+
+def per_table(
+    spark: SparkSession,
+    fn: Callable[[str, DataFrame], T],
+    frames: dict[str, DataFrame],
+) -> dict[str, T]:
+    """``{name: fn(name, frame)}`` with one thread per table, so the Spark
+    jobs the calls submit run concurrently through the shared scheduler
+    (per-table jobs are small; serially each one costs a job barrier).
+    Every call inherits the caller's Spark local properties — job group,
+    scheduler pool, job description — so cancelling the caller's group
+    also cancels these jobs. Each call gets its own copy of them."""
+    with ThreadPoolExecutor(len(frames)) as ex:
+        futures = {
+            n: ex.submit(inheritable_thread_target(spark)(fn), n, f)
+            for n, f in frames.items()
+        }
+        return {n: fut.result() for n, fut in futures.items()}
 
 
 def _skeleton(kept: DataFrame) -> DataFrame:
@@ -577,11 +604,15 @@ def init_state_tables(
 ) -> None:
     """Materialize the base state as managed stage tables under
     ``namespace`` (the production backfill) — seven tables when *emb*
-    and *cents* are given, five otherwise."""
+    and *cents* are given, five otherwise. The tables are written
+    concurrently (``per_table``)."""
     ensure_namespace(spark, namespace)
     built = build_state_detailed(base_docs, emb, cents)
-    for name, frame in built.state.frames().items():
-        frame.write.mode("overwrite").saveAsTable(f"{namespace}.{name}")
+    per_table(
+        spark,
+        lambda n, f: f.write.mode("overwrite").saveAsTable(f"{namespace}.{n}"),
+        built.state.frames(),
+    )
     built.release()  # tables written: drop the backfill's internal caches
 
 
@@ -599,9 +630,21 @@ def run_increment(
 
     Uses ``merge_into_table`` per stage table — the reference's
     ingest_stocks.py:84-100 MERGE shape (Delta-native when delta-spark is
-    on the classpath, staged-swap parquet otherwise) — offering it only
-    the increment's INSERTS, so the keyed insert-only anti-join runs
-    once per table. Idempotent: a replayed batch offers no rows.
+    on the classpath, an append of the new rows on parquet otherwise) —
+    offering it only the increment's INSERTS, so the keyed insert-only
+    anti-join runs once per table. Idempotent: a replayed batch offers no
+    rows and appends no file.
+
+    The tables run in two phases, each concurrent across tables
+    (``per_table``, so the caller's job group and scheduler pool carry
+    over to every job):
+
+    1. checkpoint every table's inserts. This is a BARRIER: the inserts
+       read the stage tables lazily BY NAME, so merging table 1 before
+       inserts 2..n are materialized would silently change what they
+       compute (e.g. the edge probe re-reading an already-updated band
+       index). No table changes until every insert is checkpointed.
+    2. per table, merge its inserts, then count the merged table.
 
     Cache invalidation is SCOPED to this run's own persists: the only
     CacheManager entries an increment creates are its internal persists
@@ -609,40 +652,33 @@ def run_increment(
     exact-kept survivors and — semantic — the batch cell index), and
     entries of that class were a stale-plan bug — a later run's
     structurally-identical plan matched the previous run's cached entry,
-    which held pre-swap file listings of the stage tables. Releasing
-    them after the localCheckpoint barrier (lineage severed) leaves
-    nothing for the next increment to collide with, and unrelated caches
-    the caller holds survive. Table-direct caches are handled by
-    ``merge_into_table``'s post-swap ``refreshTable``.
+    which held pre-merge file listings of the stage tables. Releasing
+    them after the checkpoint barrier (lineage severed) leaves nothing
+    for the next increment to collide with, and unrelated caches the
+    caller holds survive. Table-direct caches are handled by
+    ``merge_into_table``'s post-merge ``refreshTable``.
 
     What the Delta path would strengthen (delta-spark is not installable
-    here — session.delta_available): (1) the staged-swap's crash window
-    (two renames) becomes one atomic commit, so a concurrent reader can
-    never observe the table under its ``__old``/``__staging`` name; (2)
-    the eager source-read inside MERGE makes the pre-swap
-    localCheckpoint a no-op safeguard instead of a correctness
-    requirement; (3) time travel would let the replay test assert
-    version N == version N+1 instead of row-set equality. The SEMANTICS
-    proven here (insert-only keyed MERGE, idempotent replay, increment
-    == rebuild) are identical on both paths."""
+    here — session.delta_available): (1) a crash mid-append can leave
+    part of an increment committed until it is replayed (the replay
+    inserts only the missing rows); one Delta commit per table makes
+    each table's merge all-or-nothing; (2) the eager source-read inside
+    MERGE makes the pre-merge checkpoint barrier a no-op safeguard
+    instead of a correctness requirement; (3) time travel would let the
+    replay test assert version N == version N+1 instead of row-set
+    equality. The SEMANTICS proven here (insert-only keyed MERGE,
+    idempotent replay, increment == rebuild) are identical on both
+    paths."""
     ensure_namespace(spark, namespace)
     inc = apply_increment_detailed(
         load_state_tables(spark, namespace), batch_docs, emb, cents
     )
-    # Sever lineage BEFORE any table swap: the inserts read the stage
-    # tables lazily BY NAME, so swapping table 1 would silently change
-    # what inserts 2..n compute (e.g. the edge probe re-reading an
-    # already-updated band index). Batch-sized checkpoints.
-    inserts = {n: f.localCheckpoint() for n, f in inc.inserts.items()}
+    inserts = per_table(spark, lambda n, f: f.localCheckpoint(), inc.inserts)
     inc.release()  # checkpoint barrier passed: drop this run's caches
-    counts: dict[str, int] = {}
-    for name, frame in inserts.items():
-        merge_into_table(
-            spark,
-            f"{namespace}.{name}",
-            frame,
-            STATE_KEYS[name],
-            insert_only=True,
-        )
-        counts[name] = spark.read.table(f"{namespace}.{name}").count()
-    return counts
+
+    def merge(name: str, frame: DataFrame) -> int:
+        table = f"{namespace}.{name}"
+        merge_into_table(spark, table, frame, STATE_KEYS[name], insert_only=True)
+        return spark.read.table(table).count()
+
+    return per_table(spark, merge, inserts)

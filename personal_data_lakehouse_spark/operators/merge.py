@@ -14,6 +14,14 @@ any DataFrame (Delta-backed or Parquet-backed). When delta-spark IS on the
 classpath, ``merge_into_table`` uses the native, transactional
 ``MERGE INTO`` instead.
 
+On plain Parquet catalog tables the two shapes are materialized
+differently. An insert-only merge APPENDS the anti-joined new rows as new
+data files and never touches the files already stored, so its write cost
+is O(new rows), not O(table), and a crash mid-append loses no stored row
+(a replay's anti-join skips whatever the crashed append did commit). An
+upsert must replace matched rows, so it stages the merged table and swaps
+it in by rename.
+
 Scale notes
 -----------
 - Both shapes are a single equi-join on the merge key: Catalyst broadcasts
@@ -31,7 +39,7 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
 
@@ -239,12 +247,20 @@ def merge_into_table(
 ) -> None:
     """Materialized merge into a catalog table.
 
-    With Delta on the classpath this is the native transactional MERGE; on
-    plain Parquet catalog tables it stages the merged result and swaps it in.
-    The swap renames the live table aside before promoting the staging table
-    (live → __old, staging → live, drop __old), so a crash mid-swap leaves a
-    recoverable table under one of the two names — still not atomic (Delta is
-    the production path), but never a window where the data is gone.
+    With Delta on the classpath this is the native transactional MERGE. On
+    plain Parquet catalog tables:
+
+    * ``insert_only`` appends the source rows whose key the table lacks
+      (``whenNotMatchedInsertAll``). Stored data files are never rewritten,
+      so a crash mid-append loses no stored row, and re-running the merge
+      inserts only what the crashed append did not commit. A merge with
+      nothing new (a replayed batch) writes no file at all.
+    * an upsert stages the merged result and swaps it in. The swap renames
+      the live table aside before promoting the staging table (live →
+      __old, staging → live, drop __old), so a crash mid-swap leaves a
+      recoverable table under one of the two names — still not atomic
+      (Delta is the production path), but never a window where the data
+      is gone.
     """
     if not spark.catalog.tableExists(table):
         source.write.saveAsTable(table)
@@ -263,23 +279,35 @@ def merge_into_table(
     except ImportError:
         pass
     target = spark.read.table(table)
-    merged = (
-        merge_insert_only(target, source, keys)
-        if insert_only
-        else merge_upsert(target, source, keys)
-    )
-    staging, old = f"{table}__staging", f"{table}__old"
-    merged.write.mode("overwrite").saveAsTable(staging)
-    spark.sql(f"DROP TABLE IF EXISTS {old}")
-    spark.sql(f"ALTER TABLE {table} RENAME TO {old}")
-    spark.sql(f"ALTER TABLE {staging} RENAME TO {table}")
-    spark.sql(f"DROP TABLE {old}")
-    # Invalidate every cached plan that references the swapped table: the
-    # rename sequence does NOT touch the CacheManager, so a persisted
-    # DERIVED frame built before the merge (e.g. an LSH index aggregate
-    # over this table) still matches a structurally-identical post-merge
-    # plan by logical-plan equality and silently serves PRE-merge rows —
-    # the corpus_incremental replay test caught exactly this (a replayed
-    # batch resurrected the previous run's cached band index). Delta's
-    # native MERGE invalidates through its own transaction log.
+    if insert_only:
+        # An empty append would still write one (empty) file, so the new
+        # rows are materialized once and counted on the way (an observed
+        # metric: no extra job); the append reads the materialized rows.
+        seen = Observation()
+        new_rows = (
+            source.join(target.select(*keys), on=list(keys), how="left_anti")
+            .observe(seen, F.count(F.lit(1)).alias("rows"))
+            .localCheckpoint()
+        )
+        if not seen.get["rows"]:
+            return
+        new_rows.write.mode("append").saveAsTable(table)
+    else:
+        staging, old = f"{table}__staging", f"{table}__old"
+        merge_upsert(target, source, keys).write.mode("overwrite").saveAsTable(
+            staging
+        )
+        spark.sql(f"DROP TABLE IF EXISTS {old}")
+        spark.sql(f"ALTER TABLE {table} RENAME TO {old}")
+        spark.sql(f"ALTER TABLE {staging} RENAME TO {table}")
+        spark.sql(f"DROP TABLE {old}")
+    # Invalidate every cached plan that references the merged table:
+    # neither the append nor the rename sequence touches the CacheManager,
+    # so a persisted DERIVED frame built before the merge (e.g. an LSH
+    # index aggregate over this table) still matches a structurally-
+    # identical post-merge plan by logical-plan equality and silently
+    # serves PRE-merge rows — the corpus_incremental replay test caught
+    # exactly this (a replayed batch resurrected the previous run's cached
+    # band index). Delta's native MERGE invalidates through its own
+    # transaction log.
     spark.catalog.refreshTable(table)

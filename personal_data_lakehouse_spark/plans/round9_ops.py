@@ -894,11 +894,10 @@ def stream_corpus_increments(
     of both stream capstones: with a semantic *state0* (it carries
     ``cells``) each batch also runs the semantic stage against the
     batch's embeddings *emb* and the codebook *cents*."""
-    from concurrent.futures import ThreadPoolExecutor
-
     from personal_data_lakehouse_spark.corpus_incremental import (
         CorpusState,
         apply_increment_detailed,
+        per_table,
         state_rollup,
     )
     from personal_data_lakehouse_spark.operators.partitioning import (
@@ -941,17 +940,11 @@ def stream_corpus_increments(
         # LOGICAL plans untruncated until materialization, so per-batch
         # Catalyst analysis grows with stream length — the exact failure
         # the checkpoint exists to prevent.)
-        frames = inc.state.frames()
-        with ThreadPoolExecutor(len(frames)) as ex:
-            cps = dict(
-                zip(
-                    frames,
-                    ex.map(
-                        lambda kv: kv[1].coalesce(caps[kv[0]]).localCheckpoint(),
-                        frames.items(),
-                    ),
-                )
-            )
+        cps = per_table(
+            spark,
+            lambda n, f: f.coalesce(caps[n]).localCheckpoint(),
+            inc.state.frames(),
+        )
         # checkpoint barrier passed → lineage severed: release this
         # batch's internal caches so executor storage stays bounded on
         # an unbounded stream

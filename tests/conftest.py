@@ -27,6 +27,25 @@ def spark(tmp_path_factory):
     yield s
 
 
+def data_files(spark, table):
+    """{path: size} of every data file under a catalog table's location
+    (Spark's own rule: names starting with '_' or '.' are not data)."""
+    from urllib.parse import urlparse
+
+    loc = (
+        spark.sql(f"DESCRIBE TABLE EXTENDED {table}")
+        .filter("col_name = 'Location'")
+        .first()
+        .data_type
+    )
+    return {
+        os.path.join(d, f): os.path.getsize(os.path.join(d, f))
+        for d, _, names in os.walk(urlparse(loc).path)
+        for f in names
+        if not f.startswith(("_", "."))
+    }
+
+
 @pytest.fixture(scope="session")
 def oracle():
     con = duckdb.connect()

@@ -33,7 +33,7 @@ from personal_data_lakehouse_spark.corpus_incremental import (
 from personal_data_lakehouse_spark.plans.registry import t
 from personal_data_lakehouse_spark.plans.similarity_ops import _CENTROID_IDS
 from personal_data_lakehouse_spark.similarity.ivf import pick_centroids
-from tests.conftest import SF_DIR
+from tests.conftest import SF_DIR, data_files
 
 LEXICAL_KEYS = {"fp", "shingles", "bands", "edges", "skeleton"}
 
@@ -198,7 +198,13 @@ def test_managed_table_increment_and_replay(spark, mode, monkeypatch):
 
     A spy on ``merge_into_table`` pins the merge-once contract: each
     table is offered only the increment's inserts — exactly the rows the
-    table gains on a fresh batch, and no rows at all on a replay."""
+    table gains on a fresh batch, and no rows at all on a replay. It also
+    pins the checkpoint barrier: every offered frame was checkpointed
+    before the FIRST merge started. The data-file listings pin the append
+    contract: a fresh batch keeps every stored file unchanged, and a
+    replay adds no file at all."""
+    import threading
+
     from personal_data_lakehouse_spark import corpus_incremental
 
     ns = f"corpinc_{mode}_t"
@@ -207,11 +213,29 @@ def test_managed_table_increment_and_replay(spark, mode, monkeypatch):
     emb_b = _batch_vectors(emb, 400)
     init_state_tables(spark, base, emb, cents, namespace=ns)
 
+    lock = threading.Lock()
+    checkpointed: set[int] = set()  # ids of frames localCheckpoint returned
+    at_first_merge: list[set[int]] = []
+    df_cls = type(base)
+    real_checkpoint = df_cls.localCheckpoint
+
+    def checkpoint_spy(self, *a, **k):
+        out = real_checkpoint(self, *a, **k)
+        with lock:
+            checkpointed.add(id(out))
+        return out
+
+    monkeypatch.setattr(df_cls, "localCheckpoint", checkpoint_spy)
+
     offered: dict[str, int] = {}
     real_merge = corpus_incremental.merge_into_table
 
     def spy(spark_, table, source, keys, insert_only=False):
         assert insert_only
+        with lock:
+            if not at_first_merge:
+                at_first_merge.append(set(checkpointed))
+            assert id(source) in at_first_merge[0], table
         offered[table.rpartition(".")[2]] = source.count()
         real_merge(spark_, table, source, keys, insert_only)
 
@@ -220,11 +244,18 @@ def test_managed_table_increment_and_replay(spark, mode, monkeypatch):
     def tables():
         return load_state_tables(spark, ns)
 
+    def listings():
+        return {n: data_files(spark, f"{ns}.{n}") for n in tables().frames()}
+
     sizes0 = {n: f.count() for n, f in tables().frames().items()}
+    files0 = listings()
     counts1 = run_increment(spark, batch, emb_b, cents, namespace=ns)
     assert set(offered) == set(sizes0)
     assert offered == {n: counts1[n] - sizes0[n] for n in sizes0}
     assert sum(offered.values()) > 0
+    files1 = listings()
+    for n, files in files0.items():
+        assert {p: files1[n].get(p) for p in files} == files, n
 
     assert _rows(state_rollup(tables())) == _rows(
         _rebuild_rollup(docs, emb, cents)
@@ -232,11 +263,41 @@ def test_managed_table_increment_and_replay(spark, mode, monkeypatch):
 
     before = {n: _rows(f) for n, f in tables().frames().items()}
     offered.clear()
+    at_first_merge.clear()
     counts2 = run_increment(spark, batch, emb_b, cents, namespace=ns)
     assert offered == {n: 0 for n in sizes0}
     assert counts2 == counts1
     after = {n: _rows(f) for n, f in tables().frames().items()}
     assert after == before
+    assert listings() == files1
+
+
+def test_run_increment_jobs_carry_callers_job_group(spark):
+    """``run_increment`` submits jobs from pool threads; every one of
+    them must carry the caller's job group (and with it the scheduler
+    pool and description), or cancelling the group would miss them."""
+    sc = spark.sparkContext
+    ns = "corpinc_jobgroup_t"
+    base, batch, _ = _split(spark, 400)
+    init_state_tables(spark, base, namespace=ns)
+
+    def last_job_id(group):
+        sc.setJobGroup(group, "job id marker")
+        sc.parallelize([0], 1).count()
+        return max(sc.statusTracker().getJobIdsForGroup(group))
+
+    try:
+        lo = last_job_id("marker_lo")
+        sc.setJobGroup("g", "run_increment under a caller's group")
+        run_increment(spark, batch, namespace=ns)
+        hi = last_job_id("marker_hi")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+        sc.setLocalProperty("spark.job.interruptOnCancel", None)
+    in_group = set(sc.statusTracker().getJobIdsForGroup("g"))
+    assert in_group
+    assert set(range(lo + 1, hi)) == in_group
 
 
 @modes

@@ -12,6 +12,7 @@ from personal_data_lakehouse_spark.io.rest import fetch_stock_frame
 from personal_data_lakehouse_spark.operators.merge import merge_into_table
 from personal_data_lakehouse_spark.plans.models import ModelRunner
 from personal_data_lakehouse_spark.plans.reference_models import REFERENCE_MODELS
+from tests.conftest import data_files
 
 
 def _series(days: dict[str, tuple[float, float, float, float, int]]):
@@ -76,8 +77,24 @@ def test_merge_insert_only_idempotent(pipeline):
     spark = pipeline
     ingest(spark, BATCH1)
     n1 = spark.table("bronze.raw_stock_daily").count()
+    files1 = data_files(spark, "bronze.raw_stock_daily")
     ingest(spark, BATCH1)  # replay the same batch
     assert spark.table("bronze.raw_stock_daily").count() == n1 == 7
+    # nothing new → no file appended, not even an empty one
+    assert data_files(spark, "bronze.raw_stock_daily") == files1
+
+
+def test_merge_insert_only_appends(pipeline):
+    """An insert-only merge that adds rows appends files: every data file
+    the table held before is still there with the same name and size."""
+    spark = pipeline
+    ingest(spark, BATCH1)
+    files1 = data_files(spark, "bronze.raw_stock_daily")
+    ingest(spark, BATCH2)  # one duplicate key, one new (ticker, date)
+    assert spark.table("bronze.raw_stock_daily").count() == 8
+    files2 = data_files(spark, "bronze.raw_stock_daily")
+    assert {p: files2.get(p) for p in files1} == files1
+    assert len(files2) > len(files1)
 
 
 def test_silver_gold_semantics(pipeline):

@@ -94,11 +94,10 @@ def profile_merge_analysis(spark, sf_dir, out):
 def profile_stream(spark, sf_dir, out):
     """t_stream_corpus_increments: per-batch split — apply_increment
     construction vs the five localCheckpoints vs rollup."""
-    from concurrent.futures import ThreadPoolExecutor
-
     from personal_data_lakehouse_spark.corpus_incremental import (
         CorpusState,
         apply_increment_detailed,
+        per_table,
         state_rollup,
     )
     from personal_data_lakehouse_spark.plans import round9_ops
@@ -122,11 +121,9 @@ def profile_stream(spark, sf_dir, out):
         t0 = time.perf_counter()
         inc = apply_increment_detailed(carried["state"], batch)
         t1 = time.perf_counter()
-        frames = inc.state.frames()
-        with ThreadPoolExecutor(len(frames)) as ex:
-            cps = dict(
-                zip(frames, ex.map(lambda f: f.localCheckpoint(), frames.values()))
-            )
+        cps = per_table(
+            spark, lambda _n, f: f.localCheckpoint(), inc.state.frames()
+        )
         t2 = time.perf_counter()
         inc.release()
         carried["state"] = CorpusState(**cps)
